@@ -20,4 +20,10 @@ Layout
 - ``streaming``  : Structured Streaming queries (windows, watermark, dedup).
 """
 
+from . import _zipcache
+
+# every Python worker that unpickles this package's sources or UDFs gets
+# the cheap zip-cache invalidation (see _zipcache)
+_zipcache.install()
+
 __version__ = "0.1.0"

@@ -11,6 +11,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 #: All tables the driver generates (FIXTURES.md §B).
 TABLES: tuple[str, ...] = (
@@ -124,26 +125,7 @@ def source_read(spark: SparkSession, fmt: str, path: str, **options) -> DataFram
     return reader.schema(sch).load(path)
 
 
-def _ddl_names(schema: str) -> list[str]:
-    """Top-level column names from a DDL schema string (depth-aware:
-    commas inside array<>/struct<>/decimal() don't split)."""
-    names: list[str] = []
-    depth, cur = 0, []
-    for ch in schema:
-        if ch in "<(":
-            depth += 1
-        elif ch in ">)":
-            depth -= 1
-        if ch == "," and depth == 0:
-            names.append("".join(cur).strip().split()[0].strip("`"))
-            cur = []
-        else:
-            cur.append(ch)
-    names.append("".join(cur).strip().split()[0].strip("`"))
-    return names
-
-
-def local_df(spark: SparkSession, rows, schema: str) -> DataFrame:
+def local_df(spark: SparkSession, rows, schema: str | StructType) -> DataFrame:
     """Small driver-side row list → DataFrame as ONE Arrow-backed local
     partition (r15, guide §7.3/§4).
 
@@ -152,15 +134,29 @@ def local_df(spark: SparkSession, rows, schema: str) -> DataFrame:
     downstream materialization then pays 32 python-worker round trips
     (~0.5s wall in parallel, ~5s when a coalesce/broadcast consumes the
     slices sequentially — measured on a 1-row frame). Routing through
-    pandas+Arrow plans a true single-partition LocalRelation-style scan
-    with zero python tasks (~0.03s), with the DDL schema applied
-    exactly as before. Use for every bounded driver-built frame
-    (descriptor lists, file maps, stream partials, literal LUTs)."""
-    import pandas as pd
+    Arrow plans a true single-partition LocalRelation-style scan with
+    zero python tasks (~0.03s). Use for every bounded driver-built frame
+    (descriptor lists, file maps, stream partials, literal LUTs).
 
-    names = _ddl_names(schema) if isinstance(schema, str) else schema.fieldNames()
-    pdf = pd.DataFrame(list(rows), columns=names)
-    return spark.createDataFrame(pdf, schema=schema)
+    The rows go straight into a ``pyarrow.Table`` typed by the declared
+    schema, so values arrive exact: a pandas hop would carry a nullable
+    int64 column as float64 and round values above 2**53. Naive
+    datetimes of a TIMESTAMP column are read in the session time zone,
+    as Spark's pandas path reads them."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = StructType.fromDDL(schema) if isinstance(schema, str) else schema
+    arrow_schema = to_arrow_schema(struct, timestamp_utc=False)
+    rows = list(rows)
+    table = pa.Table.from_arrays(
+        [
+            pa.array([r[i] for r in rows], type=field.type)
+            for i, field in enumerate(arrow_schema)
+        ],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema=struct)
 
 
 def sf_tag(sf_dir: str) -> str:

@@ -59,15 +59,35 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
+#: The confs of :data:`RUNTIME_CONFS` that results depend on: the UTC
+#: session clock, NTZ inference and field-id resolution of parquet, and
+#: filter pushdown, without which Spark refuses to plan the Excel source.
+#: :func:`configure` raises when one of these cannot be set.
+CRITICAL_CONFS: frozenset[str] = frozenset(
+    {
+        "spark.sql.session.timeZone",
+        "spark.sql.parquet.inferTimestampNTZ.enabled",
+        "spark.sql.parquet.fieldId.read.enabled",
+        "spark.sql.parquet.fieldId.write.enabled",
+        "spark.sql.python.filterPushdown.enabled",
+    }
+)
+
+
 def configure(spark: SparkSession) -> SparkSession:
-    """Apply runtime confs to an existing session (idempotent, cheap)."""
+    """Apply runtime confs to an existing session (idempotent, cheap).
+
+    A tuning conf that cannot be set (a deployment may mark it static) is
+    skipped; a conf of :data:`CRITICAL_CONFS` raises ``RuntimeError``,
+    since running on without it would return wrong results."""
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            # A conf may be marked static in some deployments; never fail a
-            # query over tuning.
-            pass
+        except Exception as e:
+            if k in CRITICAL_CONFS:
+                raise RuntimeError(
+                    f"cannot set correctness-critical conf {k}={v}"
+                ) from e
     return spark
 
 

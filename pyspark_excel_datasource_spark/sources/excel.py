@@ -36,6 +36,11 @@ Deliberate design changes (documented quirks the reference has, SURVEY.md
 
 Excel decode uses pandas+openpyxl when importable, else the stdlib
 ``minixlsx`` codec in this package.
+
+pandas and pyarrow are imported lazily, inside the functions that decode
+and encode (and the Arrow type map is built on first use). Importing this
+module therefore does not load pandas: the per-query streaming source
+runner, which only plans offsets and partitions, stays pandas-free.
 """
 
 from __future__ import annotations
@@ -46,10 +51,9 @@ import os
 import shutil
 import uuid
 from dataclasses import dataclass
+from functools import cache
 from typing import TYPE_CHECKING, Iterator
 
-import pandas as pd
-import pyarrow as pa
 from pyspark.errors import AnalysisException
 from pyspark.sql.datasource import (
     DataSource,
@@ -74,6 +78,8 @@ from pyspark.sql import types as T
 from . import minixlsx
 
 if TYPE_CHECKING:
+    import pandas as pd
+    import pyarrow as pa
     from pyspark.sql.types import StructType
 
 try:  # openpyxl is optional; the stdlib codec is the fallback
@@ -113,6 +119,8 @@ def _read_frame(
     185-200 materializes every cell of every column unconditionally.
     """
     if _HAVE_OPENPYXL:
+        import pandas as pd
+
         if usecols is None:
             cols_arg = None
         elif header:
@@ -208,6 +216,8 @@ def _count_rows(path: str, sheet: str | int, header: bool) -> int:
 def _sheet_names(path: str) -> list[str]:
     """All sheet names of one workbook (``sheetName="*"`` planning)."""
     if _HAVE_OPENPYXL:
+        import pandas as pd
+
         with pd.ExcelFile(path) as xf:
             return [str(n) for n in xf.sheet_names]
     return minixlsx.list_sheets(path)
@@ -341,20 +351,25 @@ def infer_spark_type(series: pd.Series, prefer_ntz: bool = False) -> T.DataType:
     return T.StringType()
 
 
-_ARROW_TYPES = {
-    T.StringType(): pa.string(),
-    T.LongType(): pa.int64(),
-    T.IntegerType(): pa.int32(),
-    T.ShortType(): pa.int16(),
-    T.ByteType(): pa.int8(),
-    T.DoubleType(): pa.float64(),
-    T.FloatType(): pa.float32(),
-    T.BooleanType(): pa.bool_(),
-    T.DateType(): pa.date32(),
-    T.TimestampType(): pa.timestamp("us"),
-    T.TimestampNTZType(): pa.timestamp("us"),
-    T.BinaryType(): pa.binary(),
-}
+@cache
+def _arrow_types() -> dict:
+    """Spark type → Arrow type of a decoded column (built on first use)."""
+    import pyarrow as pa
+
+    return {
+        T.StringType(): pa.string(),
+        T.LongType(): pa.int64(),
+        T.IntegerType(): pa.int32(),
+        T.ShortType(): pa.int16(),
+        T.ByteType(): pa.int8(),
+        T.DoubleType(): pa.float64(),
+        T.FloatType(): pa.float32(),
+        T.BooleanType(): pa.bool_(),
+        T.DateType(): pa.date32(),
+        T.TimestampType(): pa.timestamp("us"),
+        T.TimestampNTZType(): pa.timestamp("us"),
+        T.BinaryType(): pa.binary(),
+    }
 
 
 def _frame_to_batches(
@@ -366,15 +381,18 @@ def _frame_to_batches(
     test tests/test_excel_connector.py:93-112); extra file columns are
     dropped (tests:73-91).
     """
+    import pyarrow as pa
+
     missing = [f.name for f in schema.fields if f.name not in frame.columns]
     if missing:
         raise AnalysisException(
             f"columns {missing} required by the schema are missing from the "
             f"file (file has {list(frame.columns)})"
         )
+    arrow_types = _arrow_types()
     arrays = []
     for field in schema.fields:
-        target = _ARROW_TYPES.get(field.dataType)
+        target = arrow_types.get(field.dataType)
         if target is None:
             raise AnalysisException(
                 f"unsupported type {field.dataType} for column {field.name!r}"
@@ -622,6 +640,7 @@ class ExcelDataSourceWriter(DataSourceWriter):
         os.makedirs(self.staging, exist_ok=True)
 
     def write(self, iterator) -> ExcelCommitMessage:
+        import pandas as pd
         from pyspark import TaskContext
 
         ctx = TaskContext.get()
@@ -681,6 +700,7 @@ class ExcelStreamWriter(DataSourceStreamWriter):
         self.staging = os.path.join(opts.path, f".staging-{uuid.uuid4().hex[:8]}")
 
     def write(self, iterator) -> ExcelCommitMessage:
+        import pandas as pd
         from pyspark import TaskContext
 
         ctx = TaskContext.get()

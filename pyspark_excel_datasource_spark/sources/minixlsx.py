@@ -29,11 +29,14 @@ from __future__ import annotations
 import datetime as dt
 import math
 import re
+import sys
 import zipfile
+from typing import TYPE_CHECKING
 from xml.etree import ElementTree as ET
 from xml.sax.saxutils import escape
 
-import pandas as pd
+if TYPE_CHECKING:
+    import pandas as pd
 
 _NS = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
 _EPOCH = dt.datetime(1899, 12, 30)  # Excel 1900 date system epoch
@@ -124,11 +127,14 @@ def _cell_xml(ref: str, value: object) -> str | None:
         return None
     if isinstance(value, float) and math.isnan(value):
         return None
-    if value is pd.NaT:
+    # pandas values exist only once pandas is loaded; pandas is imported
+    # lazily, so a codec call that never touches a frame never loads it
+    pd = sys.modules.get("pandas")
+    if pd is not None and value is pd.NaT:
         return None
     if isinstance(value, (bool,)):
         return f'<c r="{ref}" t="b"><v>{int(value)}</v></c>'
-    if isinstance(value, pd.Timestamp):
+    if pd is not None and isinstance(value, pd.Timestamp):
         value = value.to_pydatetime()
     if isinstance(value, dt.datetime):
         return f'<c r="{ref}" s="1"><v>{_serial(value)!r}</v></c>'
@@ -434,6 +440,8 @@ def read_xlsx(
     does ~2/50ths of the cell-decode work. Names absent from the sheet are
     ignored here (the connector's schema binding raises for them).
     """
+    import pandas as pd
+
     # Streaming parse (iterparse) with early termination: a chunk
     # partition or a schema-inference sample reads only its prefix of the
     # sheet instead of materializing the whole XML DOM — this is what

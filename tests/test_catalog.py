@@ -9,8 +9,15 @@ query keeps working when the testdata migrates again.
 from __future__ import annotations
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
-from pyspark_excel_datasource_spark.catalog import SMOKE_SF_DIR, TABLES, table
+from pyspark_excel_datasource_spark.catalog import (
+    SMOKE_SF_DIR,
+    TABLES,
+    local_df,
+    table,
+)
 
 
 def test_events_ts_is_timestamp_ntz(spark):
@@ -148,3 +155,25 @@ def test_estimate_scan_parts_many_tiny_files(spark, tmp_path):
     assert est is not None
     # 40 files at 4 MB openCost each pack ~32/128MB-split => 2 splits
     assert abs(est - actual) <= 1, (est, actual)
+
+
+_LONGS = st.one_of(st.none(), st.integers(min_value=-(2**63), max_value=2**63 - 1))
+_INTS = st.integers(min_value=-(2**31), max_value=2**31 - 1)
+
+
+def test_local_df_keeps_int64_exact(spark):
+    rows = [(1, 2**60 + 1), (2, None)]
+    df = local_df(spark, rows, "k INT, v BIGINT")
+    assert [tuple(r) for r in df.collect()] == rows
+
+
+@settings(max_examples=25, deadline=None)
+@given(
+    rows=st.lists(
+        st.tuples(_INTS, _LONGS, st.one_of(st.none(), st.text(max_size=8))),
+        max_size=6,
+    )
+)
+def test_local_df_round_trips_rows(spark, rows):
+    df = local_df(spark, rows, "k INT, v BIGINT, s STRING")
+    assert [tuple(r) for r in df.collect()] == rows
