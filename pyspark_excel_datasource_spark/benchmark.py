@@ -120,25 +120,27 @@ HEADLINE = (
 RUNS = 3
 
 
-#: headline names timed on a DIFFERENT impl than the registered
+#: headline names timed on a DIFFERENT hash family than the registered
 #: (driver-hash-verified) gate plan — surfaced verbatim in the bench
 #: JSON as "native_impls" so the summary line is self-describing about
-#: which plan each number measured (ADVICE r11). q_dedup_minhash /
-#: q_sim_ann_pq time their xxhash64 / trained-codebook natives. (The DV
-#: write headline is named q_delta_delete_dv_fresh outright since r13,
-#: so it no longer needs a native_impls disclosure.) Both natives carry
-#: their own driver hash verdicts since r13 via the registered audit
-#: rows q_dedup_minhash_native_audit / q_sim_ann_pq_native_audit
-#: (VERDICT r12 #4).
+#: which plan each number measured (ADVICE r11). Each approximate
+#: operator has one builder; the gate names run it on the md5 family,
+#: while q_dedup_minhash / q_sim_ann_pq here time the same builders on
+#: the xxhash64 / trained-codebook family. (The DV write headline is
+#: named q_delta_delete_dv_fresh outright since r13, so it no longer
+#: needs a native_impls disclosure.) The native family carries its own
+#: oracle hash verdicts via the registered audit rows
+#: q_dedup_minhash_native_audit / q_sim_ann_pq_native_audit (VERDICT
+#: r12 #4).
 NATIVE_IMPLS = ("q_dedup_minhash", "q_sim_ann_pq")
 
 
 def _bench_impls(queries):
     """Headline name -> callable. The NATIVE_IMPLS names time their
-    native fast-path plans rather than the registered gate plans: since
-    round 11 the gate names q_dedup_minhash / q_sim_ann_pq carry md5
-    cross-engine twins (hash-verifiable, but md5-in-string-space is the
-    slow spelling), while the xxhash64 / trained-codebook natives remain
+    builders on the native hash family rather than the registered gate
+    plans: the gate names q_dedup_minhash / q_sim_ann_pq run the md5
+    cross-engine family (hash-verifiable, but md5-in-string-space is the
+    slow spelling), while the xxhash64 / trained-codebook family remains
     the documented scale path (BASELINE.md r11 note). Everything else
     times the registered query."""
     from .operators.dedup import q_dedup_minhash_native

@@ -6,25 +6,44 @@ Four families over ``documents`` / ``embeddings``:
   Jaccard via an inverted-index self-join. Exact ⇒ DuckDB-oracled.
 - **MinHash + LSH banding** (``q_dedup_minhash``): the 100 TB path — a
   32-hash signature, 8 bands × 4 rows, candidates from band-bucket joins,
-  exact Jaccard verification of candidates only. Probabilistic recall ⇒
-  rows-only check, but every emitted pair is exactly verified.
-- **SimHash** (``q_dedup_simhash``): 64-bit signatures, banded candidate
-  join, exact Hamming verification. Rows-only.
+  exact Jaccard verification of candidates only.
+- **SimHash** (``q_dedup_simhash``): bit-vote signatures, banded
+  candidate join, exact Hamming verification.
 - **Embedding near-dup canonicalization** (``q_dedup_embed``): cosine
-  threshold → per-vector canonical id (min neighbor id). Oracled.
+  threshold → per-vector canonical id (min neighbor id), with the
+  sign-LSH twin ``q_dedup_embed_lsh``.
+
+Each approximate operator has ONE builder (``minhash_pairs``,
+``incremental_lsh_pairs``, ``simhash_pairs``, ``embed_lsh_canonical``)
+that takes its hash family as a frozen record argument:
+
+- the **md5 family** (``MD5_MINHASH``, ``MD5_SIMHASH``,
+  ``similarity.MD5_LSH``) hashes with md5 — bit-identical in DuckDB, so
+  the registered gate names hash-verify the whole pipeline against
+  their oracles;
+- the **engine-native family** (``XXHASH_MINHASH``, ``XXHASH_SIMHASH``,
+  ``similarity.GAUSSIAN_LSH``) hashes with Spark's built-in ``xxhash64``
+  (JVM, codegen) or seeded Gaussian hyperplanes. It is the one
+  ``benchmark.py`` times (``q_*_native``), and in-plan audits
+  (``q_dedup_minhash_native_audit``, ``q_dedup_embed_lsh``,
+  ``q_dedup_incremental_lsh``, ``audit.q_approx_audit``) judge its
+  recall.
+
+Text signatures are built-in SQL expressions in both families; the
+embedding signatures are one Arrow-vectorized numpy pass.
 
 Scale analysis (the part that matters at 100 TB):
 
 - The inverted-index join in ``q_dedup_near`` is exact but its cost is
   Σ_shingle df(shingle)² — fine when shingles are near-unique (real text),
-  quadratic on hot shingles. The MinHash variant replaces it with
+  quadratic on hot shingles. The MinHash builder replaces it with
   O(docs × bands) bucket keys; that is the one to run at 100 TB, with the
   exact verification joining back only candidate pairs.
-- All signatures are computed with Spark's built-in ``xxhash64`` (JVM,
-  codegen) — no Python in the hot path anywhere in this module.
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,12 +51,18 @@ from pyspark.sql.window import Window as W
 
 from ..catalog import spread, table
 from ..plans.registry import ORACLES, alias_query, query
+from .similarity import (
+    _SQL_COS,
+    GAUSSIAN_LSH,
+    MD5_LSH,
+    SignLSH,
+    _dot,
+    _md5_bands_sql,
+    _norm,
+    banded_signatures,
+)
 
 _NEAR_DUP_THRESHOLD = 0.5
-_N_HASHES = 32
-_N_BANDS = 8  # 4 rows per band
-_SIMHASH_BITS = 64
-_HAMMING_MAX = 6
 
 
 def _shingles(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -156,86 +181,78 @@ def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _exact_pairs(_shingles(docs), _NEAR_DUP_THRESHOLD)
 
 
-def _hash_tokens(shingled: DataFrame) -> DataFrame:
-    """(doc_id, n, s): per-doc distinct-set size + 8-byte xxhash64 token
-    rows — the single shared scan of the native MinHash pipeline (r14):
-    signatures, banding, and candidate verification ALL derive from it,
-    so shingle STRINGS are hashed exactly once and everything downstream
-    moves 24-byte rows."""
+# ---------------------------------------------------------------------------
+# MinHash: signature → 8×4 banding → band equi-join → exact Jaccard verify
+# ---------------------------------------------------------------------------
+
+_N_HASHES = 32
+_N_BANDS = 8  # 4 rows per band
+
+
+@dataclass(frozen=True)
+class MinHashFamily:
+    """A MinHash signature hash: ``hash_sql`` spells h_i in Spark SQL
+    over one token row (``{i}`` = hash index), reading either the
+    shingle's 8-byte xxhash64 token ``s`` or the shingle string ``s0``."""
+
+    hash_sql: str
+
+    @property
+    def text(self) -> bool:
+        """True when the hash reads the shingle string ``s0``."""
+        return "s0" in self.hash_sql
+
+
+#: h_i = xxhash64(i, xxhash64(shingle)) — hash-of-hash (r14): re-hashing
+#: the 8-byte token is ~an order of magnitude cheaper per (i, shingle)
+#: pair than re-hashing variable-length strings 32×, and composing
+#: independent xxhash64 applications is the same min-wise family.
+XXHASH_MINHASH = MinHashFamily("xxhash64({i}, s)")
+#: h_i = the first 60 bits of md5(i || ':' || shingle), as DuckDB spells it
+MD5_MINHASH = MinHashFamily(
+    "CAST(conv(substring(md5(concat('{i}:', s0)), 1, 15), 16, 10) AS BIGINT)"
+)
+
+
+def _hash_tokens(shingled: DataFrame, text: bool = False) -> DataFrame:
+    """(doc_id, n, s[, s0]): per-doc distinct-set size + 8-byte xxhash64
+    token rows (plus the shingle string when a signature hash reads it)
+    — the single shared scan of the MinHash pipeline (r14): signatures,
+    banding and candidate verification all derive from it, so shingles
+    are exploded exactly once and the verify joins move 24-byte rows."""
     return shingled.selectExpr(
         "doc_id", "size(shingles) AS n", "explode(shingles) AS s0"
-    ).selectExpr("doc_id", "n", "xxhash64(s0) AS s")
+    ).selectExpr("doc_id", "n", "xxhash64(s0) AS s", *(["s0"] if text else []))
 
 
-def minhash_signatures(shingled: DataFrame, n_hashes: int = _N_HASHES) -> DataFrame:
-    """doc_id → MinHash signature array (length ``n_hashes``).
+def _minhash_bands(toks: DataFrame, family: MinHashFamily) -> DataFrame:
+    """(doc_id, band, bucket): the 32-hash signature of each document, cut
+    into 8 bands of 4 rows, each band keyed by the xxhash64 of its rows.
 
-    h_i(doc) = min over shingles of xxhash64(i, xxhash64(shingle)) —
-    deterministic, JVM-side, one explode + one groupBy (single shuffle
-    keyed by doc_id). Hash-of-hash (r14): re-hashing the 8-byte token
-    is ~an order of magnitude cheaper per (i, shingle) pair than
-    re-hashing variable-length strings 32×, and composition of
-    independent xxhash64 applications is the same min-wise family."""
-    return _signatures_from_tokens(_hash_tokens(shingled), n_hashes)
-
-
-def _signatures_from_tokens(toks: DataFrame, n_hashes: int = _N_HASHES) -> DataFrame:
-    # One F.expr for the whole signature array (r14, guide §7.3 driver
-    # work): the column-DSL spelling built ~160 JVM-bridged Column
-    # objects (32 × min/xxhash64/lit/alias + a 32-arm array), ~340 ms of
-    # driver time per plan build; one SQL string parses in a single
-    # call. Identical expression tree — integer literals and the
-    # min-of-hash aggregates are the same either way.
-    arr = ", ".join(f"min(xxhash64({i}, s))" for i in range(n_hashes))
-    return toks.groupBy("doc_id").agg(F.expr(f"array({arr}) AS sig"))
-
-
-def q_dedup_minhash_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH near-dup pairs: banding for candidates, exact Jaccard
-    verification of candidates only — the scale path for q_dedup_near.
-
-    Bench-only since round 11: the gate name ``q_dedup_minhash`` now
-    carries the md5 cross-engine plan (hash-verifiable end to end); this
-    xxhash64 form stays the timed fast path (benchmark.BENCH_IMPL) and
-    keeps its recall contract audited in-plan by ``q_approx_audit``.
-
-    With 8 bands × 4 rows, P(candidate) = 1-(1-j⁴)⁸: ≈0.97 at j=0.7,
-    ≈0.33 at j=0.3 — the planted near-dups (j≥0.5) are found with
-    high probability while the ~125k background pairs (j<0.1) almost
-    never collide, so the verify join touches candidate pairs only.
-    """
-    return minhash_pairs(table(spark, sf_dir, "documents"))
-
-
-def minhash_candidates(shingled: DataFrame) -> DataFrame:
-    """Shingled docs → distinct LSH candidate pairs (d1 < d2) via
-    xxhash64 MinHash banding — the candidate stage of ``minhash_pairs``,
-    exposed so ``q_dedup_minhash_native_audit`` can pin its coverage."""
-    return _candidates_from_tokens(_hash_tokens(shingled))
-
-
-def _candidates_from_tokens(toks: DataFrame) -> DataFrame:
-    sig = _signatures_from_tokens(toks)
-
-    rows_per_band = _N_HASHES // _N_BANDS
-    # Single-expr banding (r14, guide §7.3): same (band, bucket) rows as
-    # the explode(array(struct...)) DSL spelling — inline() is explode +
-    # struct-field projection in one generator — built in one JVM call
-    # instead of ~70.
+    One explode + one groupBy (single shuffle keyed by doc_id; the min
+    aggregates run map-side). The signature array and the banding are one
+    SQL expression each (r14, guide §7.3 driver work): the column-DSL
+    spelling built hundreds of JVM-bridged Column objects per build, one
+    string parses in a single call. ``inline()`` is explode +
+    struct-field projection in one generator."""
+    arr = ", ".join(f"min({family.hash_sql.format(i=i)})" for i in range(_N_HASHES))
+    sig = toks.groupBy("doc_id").agg(F.expr(f"array({arr}) AS sig"))
+    rows = _N_HASHES // _N_BANDS
     structs = ", ".join(
         "struct({b} AS band, xxhash64({els}) AS bucket)".format(
             b=b,
             els=", ".join(
-                f"element_at(sig, {b * rows_per_band + r + 1})"
-                for r in range(rows_per_band)
+                f"element_at(sig, {b * rows + r + 1})" for r in range(rows)
             ),
         )
         for b in range(_N_BANDS)
     )
-    bands = sig.select("doc_id", F.expr(f"inline(array({structs}))"))
+    return sig.select("doc_id", F.expr(f"inline(array({structs}))"))
 
-    a = bands.alias("a")
-    b = bands.alias("b")
+
+def _band_pairs(bands: DataFrame) -> DataFrame:
+    """Distinct candidate pairs (d1 < d2) sharing a (band, bucket) key."""
+    a, b = bands.alias("a"), bands.alias("b")
     return (
         a.join(
             b,
@@ -249,18 +266,36 @@ def _candidates_from_tokens(toks: DataFrame) -> DataFrame:
     )
 
 
-def minhash_pairs(docs: DataFrame) -> DataFrame:
-    """(doc_id, text) → verified near-dup pairs via MinHash banding — the
-    reusable operator behind ``q_dedup_minhash`` (also driven at 10× by
-    ``tools/scale_stress.py``). One cached token-hash table feeds the
-    signature aggregate AND the candidate verify — strings are shingled
-    and hashed exactly once, everything after the cache moves 24-byte
-    rows. The cache sits on the TOKEN table, not the shingle arrays
-    (r14): both consumers read (doc_id, n, s) rows, so caching below
-    the explode+hash would re-run it once per consumer and pin the
-    larger array payload in storage."""
-    toks = _hash_tokens(_shingles(docs)).cache()
-    return _verify_from_tokens(_candidates_from_tokens(toks), toks)
+def minhash_candidates(shingled: DataFrame) -> DataFrame:
+    """Shingled docs → distinct ``XXHASH_MINHASH`` banding candidate pairs
+    — the candidate stage of ``minhash_pairs``, exposed so
+    ``q_dedup_minhash_native_audit`` can pin its coverage."""
+    return _band_pairs(_minhash_bands(_hash_tokens(shingled), XXHASH_MINHASH))
+
+
+def minhash_pairs(
+    docs: DataFrame, family: MinHashFamily = XXHASH_MINHASH
+) -> DataFrame:
+    """(doc_id, text) → verified near-dup pairs (d1, d2, jaccard) via
+    MinHash banding — the operator behind ``q_dedup_minhash`` (also driven
+    at 10× by ``tools/scale_stress.py``).
+
+    With 8 bands × 4 rows, P(candidate) = 1-(1-j⁴)⁸: ≈0.97 at j=0.7,
+    ≈0.33 at j=0.3 — the planted near-dups (j≥0.5) are found with high
+    probability while the background pairs (j<0.1) almost never collide,
+    so the verify join touches candidate pairs only. The cache sits on
+    the TOKEN table, not the shingle arrays (r14): both consumers read
+    token rows, so caching below the explode would re-run it once per
+    consumer and pin the larger array payload in storage."""
+    toks = _hash_tokens(_shingles(docs), family.text).cache()
+    return _verify_from_tokens(_band_pairs(_minhash_bands(toks, family)), toks)
+
+
+def q_dedup_minhash_native(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``minhash_pairs`` on ``XXHASH_MINHASH`` — the timed fast path
+    (``benchmark.NATIVE_IMPLS``), audited in-plan by
+    ``q_dedup_minhash_native_audit`` and ``q_approx_audit``."""
+    return minhash_pairs(table(spark, sf_dir, "documents"))
 
 
 def verify_candidates(candidates: DataFrame, shingled: DataFrame) -> DataFrame:
@@ -270,16 +305,12 @@ def verify_candidates(candidates: DataFrame, shingled: DataFrame) -> DataFrame:
     r14 spelling (VERDICT r13 #6): the verify path moves only 8-byte
     xxhash64 tokens + ids — never shingle ARRAYS (the r13 form joined
     each candidate doc's full shingle array through the shuffle, i.e.
-    document text volume). The candidate-doc ID set (ids only, ≤ 2×
-    the df-cap-bounded candidate pairs — a sparse fraction of any
-    corpus the banding is tuned for) BROADCASTS onto the shingled scan,
-    so only candidate docs are exploded and no exchange ever carries an
-    array; set sizes ride the token rows and |intersection| falls out
-    of a (d2, s)-keyed join — the same inverted-index arithmetic as
-    ``_pair_overlap``, restricted to candidates only. A 64-bit shingle
-    collision (P ≈ n²/2⁶⁴) would be caught by the DuckDB oracle, which
-    verifies on strings. Plan-pinned by
-    ``test_plan_quality.py::test_minhash_verify_shuffles_hashes_only``.
+    document text volume). Set sizes ride the token rows and
+    |intersection| falls out of a (d2, s)-keyed join — the same
+    inverted-index arithmetic as ``_pair_overlap``, restricted to
+    candidates only. A 64-bit shingle collision (P ≈ n²/2⁶⁴) would be
+    caught by the DuckDB oracle, which verifies on strings. Plan-pinned
+    by ``test_plan_quality.py::test_minhash_verify_shuffles_hashes_only``.
     """
     return _verify_from_tokens(candidates, _hash_tokens(shingled))
 
@@ -308,48 +339,72 @@ def _verify_from_tokens(candidates: DataFrame, toks: DataFrame) -> DataFrame:
     )
 
 
-@query(
-    "q_dedup_minhash_native_audit",
-    oracle=f"""
-    WITH sh AS (
+#: DuckDB shingle CTE of the md5 oracles (sub-3-token docs have no
+#: shingles, as ``_shingles`` leaves them empty)
+_MD5_SH_SQL = """sh AS (
         SELECT doc_id,
                LIST_DISTINCT([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
                               for i in RANGE(1, LEN(w) - 1)]) AS shingles
         FROM (SELECT doc_id, STRING_SPLIT(text, ' ') AS w FROM documents)
-    ),
-    toks AS (SELECT doc_id, UNNEST(shingles) AS s FROM sh),
-    inter AS (
-        SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS inter
-        FROM toks a JOIN toks b ON a.s = b.s AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
-    sizes AS (SELECT doc_id, LEN(shingles) AS n FROM sh),
-    exact AS (
-        SELECT d1, d2,
-               CAST(inter AS DOUBLE) / (s1.n + s2.n - inter) AS jaccard
-        FROM inter
-        JOIN sizes s1 ON d1 = s1.doc_id
-        JOIN sizes s2 ON d2 = s2.doc_id
-        WHERE CAST(inter AS DOUBLE) / (s1.n + s2.n - inter)
-              >= {_NEAR_DUP_THRESHOLD}
+        WHERE LEN(w) >= 3
+    )"""
+
+#: DuckDB string-set Jaccard of the candidate pair (s1, s2)
+_JACCARD_SQL = (
+    "CAST(LEN(LIST_INTERSECT(s1.shingles, s2.shingles)) AS DOUBLE)"
+    " / LEN(LIST_DISTINCT(s1.shingles || s2.shingles))"
+)
+
+
+def _md5_minhash_sql() -> str:
+    """DuckDB CTEs ``sh``/``toks``/``sigs``: ``MD5_MINHASH`` signature
+    columns h0..h31 per document."""
+    hs = ",\n               ".join(
+        f"CAST(MIN(CAST(('0x' || SUBSTR(MD5('{i}:' || s), 1, 15)) "
+        f"AS UBIGINT)) AS BIGINT) AS h{i}"
+        for i in range(_N_HASHES)
     )
+    return f"""{_MD5_SH_SQL},
+    toks AS (SELECT doc_id, UNNEST(shingles) AS s FROM sh),
+    sigs AS (
+        SELECT doc_id,
+               {hs}
+        FROM toks GROUP BY doc_id
+    )"""
+
+
+def _band_match_sql(a: str, b: str) -> str:
+    """DuckDB predicate: signatures ``a`` and ``b`` agree on some band."""
+    rows = _N_HASHES // _N_BANDS
+    return "\n            OR ".join(
+        "("
+        + " AND ".join(
+            f"{a}.h{rows * g + r} = {b}.h{rows * g + r}" for r in range(rows)
+        )
+        + ")"
+        for g in range(_N_BANDS)
+    )
+
+
+@query(
+    "q_dedup_minhash_native_audit",
+    oracle=f"""
     SELECT CAST(COUNT(*) AS BIGINT) AS n_pairs,
            CAST(COALESCE(SUM(d1 + d2), 0) AS BIGINT) AS key_sum,
            CAST(COALESCE(SUM(CAST(FLOOR(jaccard * 1e6 + 0.5) AS BIGINT)), 0)
                 AS BIGINT) AS jq_sum,
            TRUE AS native_equals_exact,
            TRUE AS candidates_cover_exact
-    FROM exact
+    FROM ({ORACLES["q_dedup_near"]}) exact
     """,
 )
 def q_dedup_minhash_native_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hash-pins the EXACT plan the bench headline times (VERDICT r12
-    #4): the xxhash64 MinHash-banding pipeline (``minhash_pairs`` — the
-    ``benchmark.NATIVE_IMPLS`` fast path behind the ``q_dedup_minhash``
-    headline) is run ON DATA and compared against the exact inverted-
-    index pair set, in one frame the driver hash-verifies:
+    """Hash-pins the ``XXHASH_MINHASH`` plan the bench headline times
+    (VERDICT r12 #4): the banding pipeline is run ON DATA and compared
+    against the exact inverted-index pair set, in one frame the driver
+    hash-verifies:
 
-    - ``n_pairs`` / ``key_sum`` / ``jq_sum``: census of the NATIVE
+    - ``n_pairs`` / ``key_sum`` / ``jq_sum``: census of the native
       plan's verified pairs (count, id sum, per-pair 1e-6-quantized
       Jaccard sum) — the oracle recomputes them from the EXACT pair
       set, so they only hash-match when the native output IS the exact
@@ -359,10 +414,6 @@ def q_dedup_minhash_native_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     - ``candidates_cover_exact``: every exact pair was already a
       banding CANDIDATE — recall 1.0 at the candidate stage, so the
       verify stage (exact by construction) is the only filter.
-
-    The md5-family gate twin ``q_dedup_minhash`` hash-verifies its own
-    plan each window; with this row the xxhash64 family carries a
-    driver verdict too, closing the bench/gate split transparently.
     """
     docs = table(spark, sf_dir, "documents")
     shingled = _shingles(docs).cache()
@@ -422,99 +473,180 @@ def q_dedup_minhash_native_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def simhash_signature_frame(docs: DataFrame) -> DataFrame:
-    """(doc_id, text) → (doc_id, simhash) 64-bit signatures.
+@query(
+    "q_dedup_minhash_oracled",
+    oracle=f"""
+    WITH {_md5_minhash_sql()},
+    cand AS (
+        SELECT a.doc_id AS d1, b.doc_id AS d2
+        FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id
+        WHERE {_band_match_sql('a', 'b')}
+    )
+    SELECT d1, d2, {_JACCARD_SQL} AS jaccard
+    FROM cand
+    JOIN sh s1 ON d1 = s1.doc_id
+    JOIN sh s2 ON d2 = s2.doc_id
+    WHERE {_JACCARD_SQL} >= {_NEAR_DUP_THRESHOLD}
+    """,
+)
+def q_dedup_minhash_oracled(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``minhash_pairs`` on ``MD5_MINHASH``: 32-way signatures, 8×4
+    banding, candidate generation and exact-Jaccard verify hash-verify
+    against the oracle end to end. (The oracle spells candidates as an
+    O(n²) signature comparison because DuckDB has no explode-free
+    banding idiom — the Spark side stays the banded equi-join.) Spark
+    keys each band on the xxhash64 of its 4 values while the oracle
+    compares the 4 values, so parity holds up to a 64-bit bucket
+    collision: one would add a candidate, and a colliding pair with
+    Jaccard ≥ 0.5 would be emitted by Spark only."""
+    return minhash_pairs(table(spark, sf_dir, "documents"), MD5_MINHASH)
+
+
+alias_query("q_dedup_minhash", "q_dedup_minhash_oracled")
+
+
+# ---------------------------------------------------------------------------
+# SimHash: bit-vote signature → banded equi-join → exact Hamming verify
+# ---------------------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class SimHashFamily:
+    """A SimHash family: ``token_hash`` hashes one shingle ``tok`` (Spark
+    SQL, a long), signatures keep ``bits`` vote bits, bands are
+    ``band_bits`` wide and pairs verify at Hamming ≤ ``hamming_max``.
+
+    With ``hamming_max`` below the band count the pigeonhole guarantee
+    is COMPLETE: that many differing bits cannot touch every band, so
+    every pair within the bound shares a band and banding recall w.r.t.
+    the Hamming criterion is exactly 1.0 (the block-split scheme of
+    Manku, Jain & Das Sarma, WWW 2007). Cost dial: b-bit band equality
+    admits ~bands/2^b of random pairs as candidates — at 100 TB, widen
+    bands or add a second-stage band refinement."""
+
+    token_hash: str
+    bits: int
+    band_bits: int
+    hamming_max: int
+
+
+_HAMMING_MAX = 6
+XXHASH_SIMHASH = SimHashFamily("xxhash64(tok)", 64, 8, _HAMMING_MAX)
+#: 60-bit md5 feature hashes (bit-identical in DuckDB), 6 bands × 10 bits
+MD5_SIMHASH = SimHashFamily(
+    "CAST(conv(substring(md5(tok), 1, 15), 16, 10) AS BIGINT)", 60, 10, 5
+)
+
+
+def simhash_signature_frame(
+    docs: DataFrame, family: SimHashFamily = XXHASH_SIMHASH
+) -> DataFrame:
+    """(doc_id, text) → (doc_id, simhash): bit i is set when the ±1 votes
+    of the shingle hashes' bit i sum above zero.
 
     Shingle features, not bare words: on short-vocab corpora every word
     *set* is similar, so bag-of-words simhash collides globally; 3-gram
     shingles carry the sequence structure that distinguishes documents.
-    Single construction point shared by the query and the brute-force
-    recall test so the two can't drift.
-    """
-    toks = (
+    The votes and the bit assembly are ONE aggregate expression (the
+    ``_minhash_bands`` idiom): the column-DSL spelling built ~1k Column
+    objects per plan build."""
+    bits = " | ".join(
+        f"IF(sum(IF((shiftright(h, {i}) & 1) = 1, 1, -1)) > 0,"
+        f" shiftleft(1L, {i}), 0L)"
+        for i in range(family.bits)
+    )
+    return (
         _shingles(docs)
-        .select("doc_id", F.explode("shingles").alias("tok"))
-        .withColumn("h", F.xxhash64("tok"))
+        .selectExpr("doc_id", "explode(shingles) AS tok")
+        .selectExpr("doc_id", f"{family.token_hash} AS h")
+        .groupBy("doc_id")
+        .agg(F.expr(f"{bits} AS simhash"))
     )
-    votes = toks.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(
-                    F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) == 1, 1
-                ).otherwise(-1)
-            ).alias(f"v{i}")
-            for i in range(_SIMHASH_BITS)
-        ]
+
+
+def simhash_pairs(
+    docs: DataFrame, family: SimHashFamily = XXHASH_SIMHASH
+) -> DataFrame:
+    """(doc_id, text) → SimHash near-dup pairs (d1, d2, hamming): one
+    band explode, bucket equi-join, Hamming verify of candidates only."""
+    sigs = simhash_signature_frame(docs, family)
+    width = family.band_bits
+    structs = ", ".join(
+        f"struct({b} AS band, shiftrightunsigned(simhash, {b * width})"
+        f" & {(1 << width) - 1} AS bval)"
+        for b in range(family.bits // width)
     )
-    bit_terms = [
-        F.when(
-            F.col(f"v{i}") > 0,
-            F.lit(1).cast("long") * (2**i if i < 63 else -(2**63)),
-        ).otherwise(0)
-        for i in range(_SIMHASH_BITS)
-    ]
-    return votes.select(
-        "doc_id",
-        sum(bit_terms[1:], bit_terms[0]).alias("simhash"),
+    bands = sigs.select("doc_id", "simhash", F.expr(f"inline(array({structs}))"))
+    a, b = bands.alias("a"), bands.alias("b")
+    return (
+        a.join(
+            b,
+            F.expr(
+                "a.band = b.band AND a.bval = b.bval AND a.doc_id < b.doc_id"
+            ),
+        )
+        .selectExpr(
+            "a.doc_id AS d1",
+            "b.doc_id AS d2",
+            "CAST(bit_count(a.simhash ^ b.simhash) AS INT) AS hamming",
+        )
+        .where(f"hamming <= {family.hamming_max}")
+        .distinct()
     )
 
 
 def q_dedup_simhash_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs: 64-bit signature = sign of per-bit vote sums
-    over token hashes; candidates from 8-bit band equality; exact Hamming
-    verify ≤ 6. Bench-only since round 11 (see q_dedup_minhash_native);
-    the gate name ``q_dedup_simhash`` carries the md5 60-bit plan.
+    """``simhash_pairs`` on ``XXHASH_SIMHASH`` (64 bits, 8 bands of 8,
+    Hamming ≤ 6); banding recall asserted against brute-force Hamming in
+    tests/test_extensions.py."""
+    return simhash_pairs(table(spark, sf_dir, "documents"))
 
-    With 8 bands of 8 bits, the pigeonhole guarantee is COMPLETE for the
-    verify threshold: ≤ 7 differing bits cannot touch all 8 bands, so
-    every pair within Hamming 6 shares at least one band and
-    recall w.r.t. the Hamming criterion is exactly 1.0 (the block-split
-    scheme of Manku, Jain & Das Sarma, WWW 2007, public). Asserted
-    against brute-force Hamming in tests/test_extensions.py. Cost dial:
-    byte-equality admits ~8/256 of random pairs as candidates — at
-    100 TB, widen bands (and accept probabilistic recall) or add a
-    second-stage band refinement if candidate volume dominates.
-    """
-    sigs = simhash_signature_frame(table(spark, sf_dir, "documents"))
 
-    bands = sigs.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftrightunsigned("simhash", b * 8)
-                        .bitwiseAND(F.lit(0xFF))
-                        .alias("chunk"),
-                    )
-                    for b in range(8)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "simhash", "bb.band", "bb.chunk")
-
-    a = bands.alias("a")
-    b = bands.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("d1"),
-            F.col("b.doc_id").alias("d2"),
-            F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-            ).alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= _HAMMING_MAX)
+def _md5_simhash_oracle() -> str:
+    fam = MD5_SIMHASH
+    votes = ",\n               ".join(
+        f"SUM(CASE WHEN (h >> {i}) & 1 = 1 THEN 1 ELSE -1 END) AS v{i}"
+        for i in range(fam.bits)
     )
-    return pairs
+    sig = "\n                 + ".join(
+        f"(CASE WHEN v{i} > 0 THEN {2**i}::BIGINT ELSE 0 END)"
+        for i in range(fam.bits)
+    )
+    return f"""
+    WITH {_MD5_SH_SQL},
+    toks AS (
+        SELECT doc_id,
+               CAST(('0x' || SUBSTR(MD5(s), 1, 15)) AS UBIGINT)::BIGINT AS h
+        FROM (SELECT doc_id, UNNEST(shingles) AS s FROM sh)
+    ),
+    votes AS (
+        SELECT doc_id,
+               {votes}
+        FROM toks GROUP BY doc_id
+    ),
+    sigs AS (
+        SELECT doc_id,
+               {sig} AS sig
+        FROM votes
+    )
+    SELECT a.doc_id AS d1, b.doc_id AS d2,
+           CAST(bit_count(xor(a.sig, b.sig)) AS INT) AS hamming
+    FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id
+    WHERE bit_count(xor(a.sig, b.sig)) <= {fam.hamming_max}
+    """
+
+
+@query("q_dedup_simhash_oracled", oracle=_md5_simhash_oracle())
+def q_dedup_simhash_oracled(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``simhash_pairs`` on ``MD5_SIMHASH`` (60 bits, 6 bands × 10,
+    Hamming ≤ 5): banding recall is exactly 1.0 by the pigeonhole
+    argument, so the banded Spark plan provably equals the oracle's
+    exhaustive pair scan — which is what lets a SIGNATURE-based dedup be
+    value-hash-verified end to end."""
+    return simhash_pairs(table(spark, sf_dir, "documents"), MD5_SIMHASH)
+
+
+alias_query("q_dedup_simhash", "q_dedup_simhash_oracled")
 
 
 def connected_min_labels(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
@@ -662,8 +794,6 @@ def q_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _embed_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .similarity import _norm
-
     return (
         spread(table(spark, sf_dir, "embeddings"))
         .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
@@ -671,10 +801,22 @@ def _embed_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _min_id_canonical(emb: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Each vector → the smallest vec_id among itself and its (va → vb)
+    verified neighbors."""
+    return (
+        emb.join(pairs, emb.vec_id == pairs.va, "left")
+        .groupBy("vec_id")
+        .agg(
+            F.least(
+                F.col("vec_id"), F.coalesce(F.min("vb"), F.col("vec_id"))
+            ).alias("canonical_id")
+        )
+    )
+
+
 def embed_exact_canonical(emb: DataFrame) -> DataFrame:
     """Exact all-pairs min-id canonicalization (see ``q_dedup_embed``)."""
-    from .similarity import _dot
-
     a = emb.alias("a")
     b = emb.alias("b")
     pairs = (
@@ -688,15 +830,7 @@ def embed_exact_canonical(emb: DataFrame) -> DataFrame:
         )
         .filter(F.col("cos") >= 0.45)
     )
-    return (
-        emb.join(pairs, emb.vec_id == pairs.va, "left")
-        .groupBy("vec_id")
-        .agg(
-            F.least(
-                F.col("vec_id"), F.coalesce(F.min("vb"), F.col("vec_id"))
-            ).alias("canonical_id")
-        )
-    )
+    return _min_id_canonical(emb, pairs)
 
 
 #: flagship-agreement floor (same value as q_approx_audit's embed floor:
@@ -704,13 +838,11 @@ def embed_exact_canonical(emb: DataFrame) -> DataFrame:
 _EMBED_AGREE_FLOOR = 0.95
 
 
-def embed_lsh_canonical(emb: DataFrame) -> DataFrame:
+def embed_lsh_canonical(emb: DataFrame, lsh: SignLSH = GAUSSIAN_LSH) -> DataFrame:
     """Banded sign-LSH canonicalization (see ``q_dedup_embed_lsh``):
     candidates from the (band, bucket) self-join, exactly cosine-verified,
     then the same min-id aggregation as the exact operator."""
-    from .similarity import _dot, banded_signatures
-
-    signed = banded_signatures(emb)
+    signed = banded_signatures(emb, lsh)
     buckets = signed.select(
         "vec_id", F.posexplode("bands").alias("band", "bval")
     )
@@ -736,16 +868,7 @@ def embed_lsh_canonical(emb: DataFrame) -> DataFrame:
         .filter(F.col("cos") >= 0.45)
         .select("va", "vb")
     )
-    return (
-        signed.select("vec_id")
-        .join(pairs, signed.vec_id == pairs.va, "left")
-        .groupBy("vec_id")
-        .agg(
-            F.least(
-                F.col("vec_id"), F.coalesce(F.min("vb"), F.col("vec_id"))
-            ).alias("canonical_id")
-        )
-    )
+    return _min_id_canonical(signed.select("vec_id"), pairs)
 
 
 def _embed_lsh_oracle() -> str:
@@ -843,13 +966,17 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return incremental_exact_pairs(spark, sf_dir)
 
 
+#: the content-addressed corpus/batch split of ``q_split_assign`` (md5
+#: bucket < 'cd' ≈ 80% corpus, rest = the new batch)
+_IN_CORPUS = "substring(md5(CAST(doc_id AS STRING)), 1, 2) < 'cd'"
+
+
 def incremental_exact_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cross-set near-dup pairs (see ``q_dedup_incremental``)."""
     docs = table(spark, sf_dir, "documents")
-    bucket = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
     # the split flag is a pure projection of doc_id — recompute it on the
     # shingled frame rather than joining the split table back
-    shingled = _shingles(docs).withColumn("in_corpus", bucket < "cd")
+    shingled = _shingles(docs).withColumn("in_corpus", F.expr(_IN_CORPUS))
     toks = shingled.select(
         "doc_id",
         "in_corpus",
@@ -919,41 +1046,25 @@ def q_dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact.crossJoin(F.broadcast(verdict))
 
 
-def incremental_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Banded-probe cross-set pairs: the corpus side keeps a persisted
-    MinHash band-bucket index (here rebuilt, in production stored); each
-    NEW batch computes signatures for its own documents only and probes
-    the index with a bucket equi-join, then exact-verifies candidates.
-    Cost per ingest is O(batch × bands) probe keys — the 100 TB corpus
-    is touched only through its index.
+def incremental_lsh_pairs(
+    spark: SparkSession, sf_dir: str, family: MinHashFamily = XXHASH_MINHASH
+) -> DataFrame:
+    """Banded-probe cross-set pairs (new_id, corpus_id, jaccard): the
+    corpus side keeps a persisted MinHash band-bucket index (here
+    rebuilt, in production stored); the NEW batch's band keys probe it
+    with a bucket equi-join, then candidates are exact-verified. Cost per
+    ingest is O(batch × bands) probe keys — the 100 TB corpus is touched
+    only through its index. As in ``incremental_exact_pairs``, the split
+    flag is computed on the band rows rather than joined back.
     """
     docs = table(spark, sf_dir, "documents")
-    bucket = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
-    pairs = minhash_pairs(docs)
-    side = docs.select(
-        "doc_id", (bucket < "cd").alias("in_corpus")
-    )
-    # minhash_pairs emits d1 < d2; keep pairs that straddle the split,
-    # oriented new_id ↔ corpus_id
-    p = (
-        pairs.join(
-            side.select(
-                F.col("doc_id").alias("d1"), F.col("in_corpus").alias("c1")
-            ),
-            "d1",
-        )
-        .join(
-            side.select(
-                F.col("doc_id").alias("d2"), F.col("in_corpus").alias("c2")
-            ),
-            "d2",
-        )
-        .filter(F.col("c1") != F.col("c2"))
-    )
-    return p.select(
-        F.when(F.col("c1"), F.col("d2")).otherwise(F.col("d1")).alias("new_id"),
-        F.when(F.col("c1"), F.col("d1")).otherwise(F.col("d2")).alias("corpus_id"),
-        "jaccard",
+    toks = _hash_tokens(_shingles(docs), family.text).cache()
+    bands = _minhash_bands(toks, family).withColumn("in_corpus", F.expr(_IN_CORPUS))
+    index = bands.where("in_corpus").selectExpr("doc_id AS d2", "band", "bucket")
+    probe = bands.where("NOT in_corpus").selectExpr("doc_id AS d1", "band", "bucket")
+    candidates = probe.join(index, ["band", "bucket"]).select("d1", "d2").distinct()
+    return _verify_from_tokens(candidates, toks).selectExpr(
+        "d1 AS new_id", "d2 AS corpus_id", "jaccard"
     )
 
 
@@ -1011,372 +1122,6 @@ def q_graph_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").cast("long").alias("n_nodes"))
         .select(F.col("degree").cast("long").alias("degree"), "n_nodes")
     )
-
-
-@query(
-    "q_dedup_minhash_oracled",
-    oracle="""
-    WITH sh AS (
-        SELECT doc_id,
-               LIST_DISTINCT([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                              for i in RANGE(1, LEN(w) - 1)]) AS shingles
-        FROM (SELECT doc_id, STRING_SPLIT(text, ' ') AS w FROM documents)
-        WHERE LEN(w) >= 3
-    ),
-    toks AS (SELECT doc_id, UNNEST(shingles) AS s FROM sh),
-    sigs AS (
-        SELECT doc_id,
-               CAST(MIN(CAST(('0x' || SUBSTR(MD5('0:' || s), 1, 15)) AS UBIGINT)) AS BIGINT) AS h0,
-               CAST(MIN(CAST(('0x' || SUBSTR(MD5('1:' || s), 1, 15)) AS UBIGINT)) AS BIGINT) AS h1,
-               CAST(MIN(CAST(('0x' || SUBSTR(MD5('2:' || s), 1, 15)) AS UBIGINT)) AS BIGINT) AS h2,
-               CAST(MIN(CAST(('0x' || SUBSTR(MD5('3:' || s), 1, 15)) AS UBIGINT)) AS BIGINT) AS h3,
-               CAST(MIN(CAST(('0x' || SUBSTR(MD5('4:' || s), 1, 15)) AS UBIGINT)) AS BIGINT) AS h4,
-               CAST(MIN(CAST(('0x' || SUBSTR(MD5('5:' || s), 1, 15)) AS UBIGINT)) AS BIGINT) AS h5,
-               CAST(MIN(CAST(('0x' || SUBSTR(MD5('6:' || s), 1, 15)) AS UBIGINT)) AS BIGINT) AS h6,
-               CAST(MIN(CAST(('0x' || SUBSTR(MD5('7:' || s), 1, 15)) AS UBIGINT)) AS BIGINT) AS h7,
-               CAST(MIN(CAST(('0x' || SUBSTR(MD5('8:' || s), 1, 15)) AS UBIGINT)) AS BIGINT) AS h8,
-               CAST(MIN(CAST(('0x' || SUBSTR(MD5('9:' || s), 1, 15)) AS UBIGINT)) AS BIGINT) AS h9,
-               CAST(MIN(CAST(('0x' || SUBSTR(MD5('10:' || s), 1, 15)) AS UBIGINT)) AS BIGINT) AS h10,
-               CAST(MIN(CAST(('0x' || SUBSTR(MD5('11:' || s), 1, 15)) AS UBIGINT)) AS BIGINT) AS h11,
-               CAST(MIN(CAST(('0x' || SUBSTR(MD5('12:' || s), 1, 15)) AS UBIGINT)) AS BIGINT) AS h12,
-               CAST(MIN(CAST(('0x' || SUBSTR(MD5('13:' || s), 1, 15)) AS UBIGINT)) AS BIGINT) AS h13,
-               CAST(MIN(CAST(('0x' || SUBSTR(MD5('14:' || s), 1, 15)) AS UBIGINT)) AS BIGINT) AS h14,
-               CAST(MIN(CAST(('0x' || SUBSTR(MD5('15:' || s), 1, 15)) AS UBIGINT)) AS BIGINT) AS h15,
-               CAST(MIN(CAST(('0x' || SUBSTR(MD5('16:' || s), 1, 15)) AS UBIGINT)) AS BIGINT) AS h16,
-               CAST(MIN(CAST(('0x' || SUBSTR(MD5('17:' || s), 1, 15)) AS UBIGINT)) AS BIGINT) AS h17,
-               CAST(MIN(CAST(('0x' || SUBSTR(MD5('18:' || s), 1, 15)) AS UBIGINT)) AS BIGINT) AS h18,
-               CAST(MIN(CAST(('0x' || SUBSTR(MD5('19:' || s), 1, 15)) AS UBIGINT)) AS BIGINT) AS h19,
-               CAST(MIN(CAST(('0x' || SUBSTR(MD5('20:' || s), 1, 15)) AS UBIGINT)) AS BIGINT) AS h20,
-               CAST(MIN(CAST(('0x' || SUBSTR(MD5('21:' || s), 1, 15)) AS UBIGINT)) AS BIGINT) AS h21,
-               CAST(MIN(CAST(('0x' || SUBSTR(MD5('22:' || s), 1, 15)) AS UBIGINT)) AS BIGINT) AS h22,
-               CAST(MIN(CAST(('0x' || SUBSTR(MD5('23:' || s), 1, 15)) AS UBIGINT)) AS BIGINT) AS h23,
-               CAST(MIN(CAST(('0x' || SUBSTR(MD5('24:' || s), 1, 15)) AS UBIGINT)) AS BIGINT) AS h24,
-               CAST(MIN(CAST(('0x' || SUBSTR(MD5('25:' || s), 1, 15)) AS UBIGINT)) AS BIGINT) AS h25,
-               CAST(MIN(CAST(('0x' || SUBSTR(MD5('26:' || s), 1, 15)) AS UBIGINT)) AS BIGINT) AS h26,
-               CAST(MIN(CAST(('0x' || SUBSTR(MD5('27:' || s), 1, 15)) AS UBIGINT)) AS BIGINT) AS h27,
-               CAST(MIN(CAST(('0x' || SUBSTR(MD5('28:' || s), 1, 15)) AS UBIGINT)) AS BIGINT) AS h28,
-               CAST(MIN(CAST(('0x' || SUBSTR(MD5('29:' || s), 1, 15)) AS UBIGINT)) AS BIGINT) AS h29,
-               CAST(MIN(CAST(('0x' || SUBSTR(MD5('30:' || s), 1, 15)) AS UBIGINT)) AS BIGINT) AS h30,
-               CAST(MIN(CAST(('0x' || SUBSTR(MD5('31:' || s), 1, 15)) AS UBIGINT)) AS BIGINT) AS h31
-        FROM toks GROUP BY doc_id
-    ),
-    cand AS (
-        SELECT a.doc_id AS d1, b.doc_id AS d2
-        FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id
-        WHERE (a.h0 = b.h0 AND a.h1 = b.h1 AND a.h2 = b.h2 AND a.h3 = b.h3)
-            OR (a.h4 = b.h4 AND a.h5 = b.h5 AND a.h6 = b.h6 AND a.h7 = b.h7)
-            OR (a.h8 = b.h8 AND a.h9 = b.h9 AND a.h10 = b.h10 AND a.h11 = b.h11)
-            OR (a.h12 = b.h12 AND a.h13 = b.h13 AND a.h14 = b.h14 AND a.h15 = b.h15)
-            OR (a.h16 = b.h16 AND a.h17 = b.h17 AND a.h18 = b.h18 AND a.h19 = b.h19)
-            OR (a.h20 = b.h20 AND a.h21 = b.h21 AND a.h22 = b.h22 AND a.h23 = b.h23)
-            OR (a.h24 = b.h24 AND a.h25 = b.h25 AND a.h26 = b.h26 AND a.h27 = b.h27)
-            OR (a.h28 = b.h28 AND a.h29 = b.h29 AND a.h30 = b.h30 AND a.h31 = b.h31)
-    )
-    SELECT d1, d2,
-           CAST(LEN(LIST_INTERSECT(s1.shingles, s2.shingles)) AS DOUBLE)
-               / LEN(LIST_DISTINCT(s1.shingles || s2.shingles)) AS jaccard
-    FROM cand
-    JOIN sh s1 ON d1 = s1.doc_id
-    JOIN sh s2 ON d2 = s2.doc_id
-    WHERE CAST(LEN(LIST_INTERSECT(s1.shingles, s2.shingles)) AS DOUBLE)
-              / LEN(LIST_DISTINCT(s1.shingles || s2.shingles)) >= 0.5
-    """,
-)
-def q_dedup_minhash_oracled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH near-dup pairs with a CROSS-ENGINE hash family: h_i =
-    min over shingles of the first 60 bits of md5(i || ':' || shingle).
-
-    The xxhash64 flagship (``q_dedup_minhash``) is the bench path but its
-    hash is JVM-only, capping the driver's check at rows-only; md5 is
-    bit-identical in DuckDB, so THIS variant's whole pipeline — 32-way
-    signatures, 8×4 banding, candidate generation, exact-Jaccard verify —
-    hash-verifies against the oracle end to end. Same plan shape as the
-    flagship: one explode + one partial-agg shuffle for signatures, band
-    equi-join on 4-value buckets, candidates-only verification. (The
-    oracle spells candidates as an O(n²) signature comparison because
-    DuckDB has no explode-free banding idiom — the SPARK side stays the
-    banded equi-join.)
-    """
-    shingled = _shingles(table(spark, sf_dir, "documents")).cache()
-    toks = shingled.select("doc_id", F.explode("shingles").alias("s"))
-
-    def h(i: int) -> F.Column:
-        return F.conv(
-            F.substring(F.md5(F.concat(F.lit(f"{i}:"), F.col("s"))), 1, 15),
-            16,
-            10,
-        ).cast("long")
-
-    sig = toks.groupBy("doc_id").agg(
-        *[F.min(h(i)).alias(f"h{i}") for i in range(32)]
-    )
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.struct(
-                            *[
-                                F.col(f"h{b * 4 + r}").alias(f"r{r}")
-                                for r in range(4)
-                            ]
-                        ).alias("bucket"),
-                    )
-                    for b in range(8)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bucket")
-    a, b = bands.alias("a"), bands.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        .distinct()
-    )
-    # Verification rides the shared token-table spelling: only 8-byte
-    # hashes + ids cross the verify shuffle (VERDICT r13 #6), and the
-    # jaccard arithmetic over hash-distinct sets equals the oracle's
-    # string-set jaccard absent a 64-bit collision (which the oracle
-    # would catch as a value mismatch).
-    return verify_candidates(candidates, shingled)
-
-
-# The canonical gate name carries the same hash-verifiable md5 plan
-# (VERDICT r10 #3); the xxhash64 native is q_dedup_minhash_native above.
-alias_query("q_dedup_minhash", "q_dedup_minhash_oracled")
-
-
-@query(
-    "q_dedup_simhash_oracled",
-    oracle="""
-    WITH sh AS (
-        SELECT doc_id,
-               LIST_DISTINCT([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                              for i in RANGE(1, LEN(w) - 1)]) AS shingles
-        FROM (SELECT doc_id, STRING_SPLIT(text, ' ') AS w FROM documents)
-        WHERE LEN(w) >= 3
-    ),
-    toks AS (
-        SELECT doc_id,
-               CAST(('0x' || SUBSTR(MD5(s), 1, 15)) AS UBIGINT)::BIGINT AS h
-        FROM (SELECT doc_id, UNNEST(shingles) AS s FROM sh)
-    ),
-    votes AS (
-        SELECT doc_id,
-               SUM(CASE WHEN (h >> 0) & 1 = 1 THEN 1 ELSE -1 END) AS v0,
-               SUM(CASE WHEN (h >> 1) & 1 = 1 THEN 1 ELSE -1 END) AS v1,
-               SUM(CASE WHEN (h >> 2) & 1 = 1 THEN 1 ELSE -1 END) AS v2,
-               SUM(CASE WHEN (h >> 3) & 1 = 1 THEN 1 ELSE -1 END) AS v3,
-               SUM(CASE WHEN (h >> 4) & 1 = 1 THEN 1 ELSE -1 END) AS v4,
-               SUM(CASE WHEN (h >> 5) & 1 = 1 THEN 1 ELSE -1 END) AS v5,
-               SUM(CASE WHEN (h >> 6) & 1 = 1 THEN 1 ELSE -1 END) AS v6,
-               SUM(CASE WHEN (h >> 7) & 1 = 1 THEN 1 ELSE -1 END) AS v7,
-               SUM(CASE WHEN (h >> 8) & 1 = 1 THEN 1 ELSE -1 END) AS v8,
-               SUM(CASE WHEN (h >> 9) & 1 = 1 THEN 1 ELSE -1 END) AS v9,
-               SUM(CASE WHEN (h >> 10) & 1 = 1 THEN 1 ELSE -1 END) AS v10,
-               SUM(CASE WHEN (h >> 11) & 1 = 1 THEN 1 ELSE -1 END) AS v11,
-               SUM(CASE WHEN (h >> 12) & 1 = 1 THEN 1 ELSE -1 END) AS v12,
-               SUM(CASE WHEN (h >> 13) & 1 = 1 THEN 1 ELSE -1 END) AS v13,
-               SUM(CASE WHEN (h >> 14) & 1 = 1 THEN 1 ELSE -1 END) AS v14,
-               SUM(CASE WHEN (h >> 15) & 1 = 1 THEN 1 ELSE -1 END) AS v15,
-               SUM(CASE WHEN (h >> 16) & 1 = 1 THEN 1 ELSE -1 END) AS v16,
-               SUM(CASE WHEN (h >> 17) & 1 = 1 THEN 1 ELSE -1 END) AS v17,
-               SUM(CASE WHEN (h >> 18) & 1 = 1 THEN 1 ELSE -1 END) AS v18,
-               SUM(CASE WHEN (h >> 19) & 1 = 1 THEN 1 ELSE -1 END) AS v19,
-               SUM(CASE WHEN (h >> 20) & 1 = 1 THEN 1 ELSE -1 END) AS v20,
-               SUM(CASE WHEN (h >> 21) & 1 = 1 THEN 1 ELSE -1 END) AS v21,
-               SUM(CASE WHEN (h >> 22) & 1 = 1 THEN 1 ELSE -1 END) AS v22,
-               SUM(CASE WHEN (h >> 23) & 1 = 1 THEN 1 ELSE -1 END) AS v23,
-               SUM(CASE WHEN (h >> 24) & 1 = 1 THEN 1 ELSE -1 END) AS v24,
-               SUM(CASE WHEN (h >> 25) & 1 = 1 THEN 1 ELSE -1 END) AS v25,
-               SUM(CASE WHEN (h >> 26) & 1 = 1 THEN 1 ELSE -1 END) AS v26,
-               SUM(CASE WHEN (h >> 27) & 1 = 1 THEN 1 ELSE -1 END) AS v27,
-               SUM(CASE WHEN (h >> 28) & 1 = 1 THEN 1 ELSE -1 END) AS v28,
-               SUM(CASE WHEN (h >> 29) & 1 = 1 THEN 1 ELSE -1 END) AS v29,
-               SUM(CASE WHEN (h >> 30) & 1 = 1 THEN 1 ELSE -1 END) AS v30,
-               SUM(CASE WHEN (h >> 31) & 1 = 1 THEN 1 ELSE -1 END) AS v31,
-               SUM(CASE WHEN (h >> 32) & 1 = 1 THEN 1 ELSE -1 END) AS v32,
-               SUM(CASE WHEN (h >> 33) & 1 = 1 THEN 1 ELSE -1 END) AS v33,
-               SUM(CASE WHEN (h >> 34) & 1 = 1 THEN 1 ELSE -1 END) AS v34,
-               SUM(CASE WHEN (h >> 35) & 1 = 1 THEN 1 ELSE -1 END) AS v35,
-               SUM(CASE WHEN (h >> 36) & 1 = 1 THEN 1 ELSE -1 END) AS v36,
-               SUM(CASE WHEN (h >> 37) & 1 = 1 THEN 1 ELSE -1 END) AS v37,
-               SUM(CASE WHEN (h >> 38) & 1 = 1 THEN 1 ELSE -1 END) AS v38,
-               SUM(CASE WHEN (h >> 39) & 1 = 1 THEN 1 ELSE -1 END) AS v39,
-               SUM(CASE WHEN (h >> 40) & 1 = 1 THEN 1 ELSE -1 END) AS v40,
-               SUM(CASE WHEN (h >> 41) & 1 = 1 THEN 1 ELSE -1 END) AS v41,
-               SUM(CASE WHEN (h >> 42) & 1 = 1 THEN 1 ELSE -1 END) AS v42,
-               SUM(CASE WHEN (h >> 43) & 1 = 1 THEN 1 ELSE -1 END) AS v43,
-               SUM(CASE WHEN (h >> 44) & 1 = 1 THEN 1 ELSE -1 END) AS v44,
-               SUM(CASE WHEN (h >> 45) & 1 = 1 THEN 1 ELSE -1 END) AS v45,
-               SUM(CASE WHEN (h >> 46) & 1 = 1 THEN 1 ELSE -1 END) AS v46,
-               SUM(CASE WHEN (h >> 47) & 1 = 1 THEN 1 ELSE -1 END) AS v47,
-               SUM(CASE WHEN (h >> 48) & 1 = 1 THEN 1 ELSE -1 END) AS v48,
-               SUM(CASE WHEN (h >> 49) & 1 = 1 THEN 1 ELSE -1 END) AS v49,
-               SUM(CASE WHEN (h >> 50) & 1 = 1 THEN 1 ELSE -1 END) AS v50,
-               SUM(CASE WHEN (h >> 51) & 1 = 1 THEN 1 ELSE -1 END) AS v51,
-               SUM(CASE WHEN (h >> 52) & 1 = 1 THEN 1 ELSE -1 END) AS v52,
-               SUM(CASE WHEN (h >> 53) & 1 = 1 THEN 1 ELSE -1 END) AS v53,
-               SUM(CASE WHEN (h >> 54) & 1 = 1 THEN 1 ELSE -1 END) AS v54,
-               SUM(CASE WHEN (h >> 55) & 1 = 1 THEN 1 ELSE -1 END) AS v55,
-               SUM(CASE WHEN (h >> 56) & 1 = 1 THEN 1 ELSE -1 END) AS v56,
-               SUM(CASE WHEN (h >> 57) & 1 = 1 THEN 1 ELSE -1 END) AS v57,
-               SUM(CASE WHEN (h >> 58) & 1 = 1 THEN 1 ELSE -1 END) AS v58,
-               SUM(CASE WHEN (h >> 59) & 1 = 1 THEN 1 ELSE -1 END) AS v59
-        FROM toks GROUP BY doc_id
-    ),
-    sigs AS (
-        SELECT doc_id,
-               (CASE WHEN v0 > 0 THEN 1::BIGINT ELSE 0 END)
-                 + (CASE WHEN v1 > 0 THEN 2::BIGINT ELSE 0 END)
-                 + (CASE WHEN v2 > 0 THEN 4::BIGINT ELSE 0 END)
-                 + (CASE WHEN v3 > 0 THEN 8::BIGINT ELSE 0 END)
-                 + (CASE WHEN v4 > 0 THEN 16::BIGINT ELSE 0 END)
-                 + (CASE WHEN v5 > 0 THEN 32::BIGINT ELSE 0 END)
-                 + (CASE WHEN v6 > 0 THEN 64::BIGINT ELSE 0 END)
-                 + (CASE WHEN v7 > 0 THEN 128::BIGINT ELSE 0 END)
-                 + (CASE WHEN v8 > 0 THEN 256::BIGINT ELSE 0 END)
-                 + (CASE WHEN v9 > 0 THEN 512::BIGINT ELSE 0 END)
-                 + (CASE WHEN v10 > 0 THEN 1024::BIGINT ELSE 0 END)
-                 + (CASE WHEN v11 > 0 THEN 2048::BIGINT ELSE 0 END)
-                 + (CASE WHEN v12 > 0 THEN 4096::BIGINT ELSE 0 END)
-                 + (CASE WHEN v13 > 0 THEN 8192::BIGINT ELSE 0 END)
-                 + (CASE WHEN v14 > 0 THEN 16384::BIGINT ELSE 0 END)
-                 + (CASE WHEN v15 > 0 THEN 32768::BIGINT ELSE 0 END)
-                 + (CASE WHEN v16 > 0 THEN 65536::BIGINT ELSE 0 END)
-                 + (CASE WHEN v17 > 0 THEN 131072::BIGINT ELSE 0 END)
-                 + (CASE WHEN v18 > 0 THEN 262144::BIGINT ELSE 0 END)
-                 + (CASE WHEN v19 > 0 THEN 524288::BIGINT ELSE 0 END)
-                 + (CASE WHEN v20 > 0 THEN 1048576::BIGINT ELSE 0 END)
-                 + (CASE WHEN v21 > 0 THEN 2097152::BIGINT ELSE 0 END)
-                 + (CASE WHEN v22 > 0 THEN 4194304::BIGINT ELSE 0 END)
-                 + (CASE WHEN v23 > 0 THEN 8388608::BIGINT ELSE 0 END)
-                 + (CASE WHEN v24 > 0 THEN 16777216::BIGINT ELSE 0 END)
-                 + (CASE WHEN v25 > 0 THEN 33554432::BIGINT ELSE 0 END)
-                 + (CASE WHEN v26 > 0 THEN 67108864::BIGINT ELSE 0 END)
-                 + (CASE WHEN v27 > 0 THEN 134217728::BIGINT ELSE 0 END)
-                 + (CASE WHEN v28 > 0 THEN 268435456::BIGINT ELSE 0 END)
-                 + (CASE WHEN v29 > 0 THEN 536870912::BIGINT ELSE 0 END)
-                 + (CASE WHEN v30 > 0 THEN 1073741824::BIGINT ELSE 0 END)
-                 + (CASE WHEN v31 > 0 THEN 2147483648::BIGINT ELSE 0 END)
-                 + (CASE WHEN v32 > 0 THEN 4294967296::BIGINT ELSE 0 END)
-                 + (CASE WHEN v33 > 0 THEN 8589934592::BIGINT ELSE 0 END)
-                 + (CASE WHEN v34 > 0 THEN 17179869184::BIGINT ELSE 0 END)
-                 + (CASE WHEN v35 > 0 THEN 34359738368::BIGINT ELSE 0 END)
-                 + (CASE WHEN v36 > 0 THEN 68719476736::BIGINT ELSE 0 END)
-                 + (CASE WHEN v37 > 0 THEN 137438953472::BIGINT ELSE 0 END)
-                 + (CASE WHEN v38 > 0 THEN 274877906944::BIGINT ELSE 0 END)
-                 + (CASE WHEN v39 > 0 THEN 549755813888::BIGINT ELSE 0 END)
-                 + (CASE WHEN v40 > 0 THEN 1099511627776::BIGINT ELSE 0 END)
-                 + (CASE WHEN v41 > 0 THEN 2199023255552::BIGINT ELSE 0 END)
-                 + (CASE WHEN v42 > 0 THEN 4398046511104::BIGINT ELSE 0 END)
-                 + (CASE WHEN v43 > 0 THEN 8796093022208::BIGINT ELSE 0 END)
-                 + (CASE WHEN v44 > 0 THEN 17592186044416::BIGINT ELSE 0 END)
-                 + (CASE WHEN v45 > 0 THEN 35184372088832::BIGINT ELSE 0 END)
-                 + (CASE WHEN v46 > 0 THEN 70368744177664::BIGINT ELSE 0 END)
-                 + (CASE WHEN v47 > 0 THEN 140737488355328::BIGINT ELSE 0 END)
-                 + (CASE WHEN v48 > 0 THEN 281474976710656::BIGINT ELSE 0 END)
-                 + (CASE WHEN v49 > 0 THEN 562949953421312::BIGINT ELSE 0 END)
-                 + (CASE WHEN v50 > 0 THEN 1125899906842624::BIGINT ELSE 0 END)
-                 + (CASE WHEN v51 > 0 THEN 2251799813685248::BIGINT ELSE 0 END)
-                 + (CASE WHEN v52 > 0 THEN 4503599627370496::BIGINT ELSE 0 END)
-                 + (CASE WHEN v53 > 0 THEN 9007199254740992::BIGINT ELSE 0 END)
-                 + (CASE WHEN v54 > 0 THEN 18014398509481984::BIGINT ELSE 0 END)
-                 + (CASE WHEN v55 > 0 THEN 36028797018963968::BIGINT ELSE 0 END)
-                 + (CASE WHEN v56 > 0 THEN 72057594037927936::BIGINT ELSE 0 END)
-                 + (CASE WHEN v57 > 0 THEN 144115188075855872::BIGINT ELSE 0 END)
-                 + (CASE WHEN v58 > 0 THEN 288230376151711744::BIGINT ELSE 0 END)
-                 + (CASE WHEN v59 > 0 THEN 576460752303423488::BIGINT ELSE 0 END) AS sig
-        FROM votes
-    )
-    SELECT a.doc_id AS d1, b.doc_id AS d2,
-           CAST(bit_count(xor(a.sig, b.sig)) AS INT) AS hamming
-    FROM sigs a JOIN sigs b ON a.doc_id < b.doc_id
-    WHERE bit_count(xor(a.sig, b.sig)) <= 5
-    """,
-)
-def q_dedup_simhash_oracled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs with a CROSS-ENGINE hash family: 60-bit
-    feature hashes from md5 (bit-identical in DuckDB), 6 bands × 10 bits,
-    exact Hamming verify ≤ 5.
-
-    The md5 twin of ``q_dedup_simhash`` (same Manku/Jain/Das Sarma
-    block-split scheme): ≤ 5 differing bits cannot touch all
-    6 bands, so banding recall w.r.t. the Hamming criterion is
-    exactly 1.0 and the banded Spark plan provably equals the oracle's
-    exhaustive pair scan — which is what lets a SIGNATURE-based dedup be
-    value-hash-verified end to end. Plan shape: one explode + one
-    partial-agg shuffle for the 60 bit-votes, 6-way band explode,
-    bucket equi-join, Hamming verify of candidates only.
-    """
-    toks = (
-        _shingles(table(spark, sf_dir, "documents"))
-        .select("doc_id", F.explode("shingles").alias("tok"))
-        .withColumn(
-            "h",
-            F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10).cast("long"),
-        )
-    )
-    votes = toks.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(
-                    F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) == 1, 1
-                ).otherwise(-1)
-            ).alias(f"v{i}")
-            for i in range(60)
-        ]
-    )
-    bit_terms = [
-        F.when(F.col(f"v{i}") > 0, F.lit(2**i).cast("long")).otherwise(0)
-        for i in range(60)
-    ]
-    sigs = votes.select("doc_id", sum(bit_terms[1:], bit_terms[0]).alias("sig"))
-    bands = sigs.select(
-        "doc_id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright(F.col("sig"), b * 10)
-                        .bitwiseAND(F.lit(1023))
-                        .alias("bval"),
-                    )
-                    for b in range(6)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "sig", "bb.band", "bb.bval")
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bval") == F.col("b.bval"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("d1"),
-            F.col("b.doc_id").alias("d2"),
-            F.bit_count(
-                F.col("a.sig").bitwiseXOR(F.col("b.sig"))
-            ).cast("int").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= 5)
-        .distinct()
-    )
-
-
-alias_query("q_dedup_simhash", "q_dedup_simhash_oracled")
 
 
 #: tokens of leading text used as the prefix-dedup key
@@ -1637,7 +1382,7 @@ def q_minhash_union_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingled = d.select("source", "doc_id", sh.alias("shingles")).cache()
 
     # level 1: per-doc signatures. Row-local higher-order form (NOT the
-    # 128-column min-aggregate of ``minhash_signatures`` — at k=128 that
+    # 128-column min-aggregate of ``_minhash_bands`` — at k=128 that
     # many aggregate expressions exceeds codegen method limits and drops
     # to interpreted mode): sig[i] = min over shingles of xxhash64(i, s),
     # computed entirely inside the scan stage.
@@ -1960,34 +1705,10 @@ def cross_source_census(d: DataFrame) -> DataFrame:
     )
 
 
-def _embed_lsh_oracled_sql() -> str:
-    """DuckDB twin of the md5-integer-hyperplane embedding dedup (built
-    here to keep the import of similarity's band constants local)."""
-    from .similarity import (
-        _ORACLED_LSH_BITS,
-        _ORACLED_PLANES,
-        _Q_SCALE,
-        _SQL_COS,
-        _lsh_weight_sql,
-    )
-
-    return f"""
-    WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-    q AS (SELECT vec_id, e,
-                 [CAST(FLOOR(x * {_Q_SCALE}) AS BIGINT) for x in e] AS qv
-          FROM v),
-    dots AS (
-        SELECT q.vec_id, t.i AS plane,
-               LIST_SUM([{_lsh_weight_sql('t.i', '(j - 1)')} * qv[j]
-                         for j in RANGE(1, LEN(qv) + 1)]) AS dot
-        FROM q, RANGE(0, {_ORACLED_PLANES}) t(i)
-    ),
-    bands AS (
-        SELECT vec_id, plane // {_ORACLED_LSH_BITS} AS band,
-               SUM(CASE WHEN dot >= 0
-                        THEN 1 << (plane % {_ORACLED_LSH_BITS}) ELSE 0 END) AS bval
-        FROM dots GROUP BY vec_id, plane // {_ORACLED_LSH_BITS}
-    ),
+@query(
+    "q_dedup_embed_lsh_oracled",
+    oracle=f"""
+    WITH {_md5_bands_sql()},
     cand AS (
         SELECT DISTINCT a.vec_id AS va, b.vec_id AS vb
         FROM bands a
@@ -2005,102 +1726,20 @@ def _embed_lsh_oracled_sql() -> str:
            LEAST(v.vec_id, COALESCE(MIN(p.vb), v.vec_id)) AS canonical_id
     FROM v LEFT JOIN pairs p ON p.va = v.vec_id
     GROUP BY v.vec_id
-    """
-
-
-@query("q_dedup_embed_lsh_oracled", oracle=_embed_lsh_oracled_sql())
+    """,
+)
 def q_dedup_embed_lsh_oracled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding min-id canonicalization on the CROSS-ENGINE integer
-    sign-LSH family: the whole pipeline — quantize → md5 hyperplane
-    banding → undirected bucket self-join → exact cosine verify (≥0.45)
-    → min-neighbor canonical ids — hash-verifies against DuckDB.
-
-    ``q_dedup_embed_lsh`` (seeded Gaussian hyperplanes, rows-only +
-    ≥95%-agreement test vs the exact operator) stays the bench/quality
-    path; this twin pins the operator's *mechanics* bit-for-bit, so the
-    family's driver record is no longer rows-only everywhere. Same plan
-    shape: one Arrow signature pass, one (band, bval) self-join,
-    candidates-only cosine.
-    """
-    from .similarity import _dot, _norm, _oracled_band_udf
-
-    emb = (
-        spread(table(spark, sf_dir, "embeddings"))
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-        .withColumn("nrm", _norm(F.col("e")))
-    )
-    dim = len(emb.select("e").first()["e"])
-    signed = emb.withColumn("bands", _oracled_band_udf(dim)(F.col("e"))).cache()
-    buckets = signed.select(
-        "vec_id", F.posexplode("bands").alias("band", "bval")
-    )
-    a, b = buckets.alias("a"), buckets.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bval") == F.col("b.bval"))
-            & (F.col("a.vec_id") != F.col("b.vec_id")),
-        )
-        .select(F.col("a.vec_id").alias("va"), F.col("b.vec_id").alias("vb"))
-        .distinct()
-    )
-    sa = signed.select(
-        F.col("vec_id").alias("va"), F.col("e").alias("ea"), F.col("nrm").alias("na")
-    )
-    sb = signed.select(
-        F.col("vec_id").alias("vb"), F.col("e").alias("eb"), F.col("nrm").alias("nb")
-    )
-    pairs = (
-        cand.join(sa, "va")
-        .join(sb, "vb")
-        .withColumn(
-            "cos", _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
-        )
-        .filter(F.col("cos") >= 0.45)
-        .select("va", "vb")
-    )
-    return (
-        signed.select("vec_id")
-        .join(pairs, signed.vec_id == pairs.va, "left")
-        .groupBy("vec_id")
-        .agg(
-            F.least(
-                F.col("vec_id"), F.coalesce(F.min("vb"), F.col("vec_id"))
-            ).alias("canonical_id")
-        )
-    )
+    """``embed_lsh_canonical`` on ``similarity.MD5_LSH``: quantize → md5
+    hyperplane banding → undirected bucket self-join → exact cosine
+    verify (≥0.45) → min-neighbor canonical ids, hash-verified against
+    DuckDB bit for bit."""
+    return embed_lsh_canonical(_embed_vectors(spark, sf_dir), MD5_LSH)
 
 
-def _incremental_lsh_oracled_sql() -> str:
-    """Generated DuckDB twin: md5-minhash sigs, corpus/batch split by
-    md5(doc_id) (the q_dedup_incremental convention), band-match
-    candidates restricted to straddling pairs, exact-Jaccard verify."""
-    hs = ",\n               ".join(
-        f"CAST(MIN(CAST(('0x' || SUBSTR(MD5('{i}:' || s), 1, 15)) "
-        f"AS UBIGINT)) AS BIGINT) AS h{i}"
-        for i in range(32)
-    )
-    bands = "\n            OR ".join(
-        "("
-        + " AND ".join(f"b.h{4 * g + r} = c.h{4 * g + r}" for r in range(4))
-        + ")"
-        for g in range(8)
-    )
-    return f"""
-    WITH sh AS (
-        SELECT doc_id,
-               LIST_DISTINCT([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                              for i in RANGE(1, LEN(w) - 1)]) AS shingles
-        FROM (SELECT doc_id, STRING_SPLIT(text, ' ') AS w FROM documents)
-        WHERE LEN(w) >= 3
-    ),
-    toks AS (SELECT doc_id, UNNEST(shingles) AS s FROM sh),
-    sigs AS (
-        SELECT doc_id,
-               {hs}
-        FROM toks GROUP BY doc_id
-    ),
+@query(
+    "q_dedup_incremental_lsh_oracled",
+    oracle=f"""
+    WITH {_md5_minhash_sql()},
     side AS (
         SELECT doc_id,
                SUBSTR(MD5(CAST(doc_id AS VARCHAR)), 1, 2) < 'cd' AS in_corpus
@@ -2110,96 +1749,22 @@ def _incremental_lsh_oracled_sql() -> str:
         SELECT DISTINCT b.doc_id AS new_id, c.doc_id AS corpus_id
         FROM sigs b
         JOIN side sb ON sb.doc_id = b.doc_id AND NOT sb.in_corpus
-        JOIN sigs c ON ({bands})
+        JOIN sigs c ON ({_band_match_sql('b', 'c')})
         JOIN side sc ON sc.doc_id = c.doc_id AND sc.in_corpus
     )
-    SELECT new_id, corpus_id,
-           CAST(LEN(LIST_INTERSECT(s1.shingles, s2.shingles)) AS DOUBLE)
-               / LEN(LIST_DISTINCT(s1.shingles || s2.shingles)) AS jaccard
+    SELECT new_id, corpus_id, {_JACCARD_SQL} AS jaccard
     FROM cand
     JOIN sh s1 ON new_id = s1.doc_id
     JOIN sh s2 ON corpus_id = s2.doc_id
-    WHERE CAST(LEN(LIST_INTERSECT(s1.shingles, s2.shingles)) AS DOUBLE)
-              / LEN(LIST_DISTINCT(s1.shingles || s2.shingles)) >= 0.5
-    """
-
-
-@query("q_dedup_incremental_lsh_oracled", oracle=_incremental_lsh_oracled_sql())
+    WHERE {_JACCARD_SQL} >= {_NEAR_DUP_THRESHOLD}
+    """,
+)
 def q_dedup_incremental_lsh_oracled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental (nightly-batch) LSH dedup on the CROSS-ENGINE md5
-    hash family: the corpus side's band-bucket index is probed by the
-    new batch's signatures, candidates straddling the split are
-    exact-Jaccard verified — the whole index-probe pipeline
-    hash-verifies against DuckDB, completing the oracled-twin family
-    (minhash, simhash, embedding-LSH, sign-LSH ANN, IVF, PQ, and now
-    the incremental probe).
-
-    Same plan shape as the xxhash64 flagship
-    (``q_dedup_incremental_lsh``): signatures once per doc, the (band,
-    bucket) equi-join touches the corpus only through its index keys,
-    exact verification on candidates only.
-    """
-    shingled = _shingles(table(spark, sf_dir, "documents")).cache()
-    toks = shingled.select("doc_id", F.explode("shingles").alias("s"))
-
-    def h(i: int) -> F.Column:
-        return F.conv(
-            F.substring(F.md5(F.concat(F.lit(f"{i}:"), F.col("s"))), 1, 15),
-            16,
-            10,
-        ).cast("long")
-
-    sig = toks.groupBy("doc_id").agg(
-        *[F.min(h(i)).alias(f"h{i}") for i in range(32)]
-    )
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.struct(
-                            *[
-                                F.col(f"h{b * 4 + r}").alias(f"r{r}")
-                                for r in range(4)
-                            ]
-                        ).alias("bucket"),
-                    )
-                    for b in range(8)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "bb.band", "bb.bucket")
-    in_corpus = (
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2) < "cd"
-    )
-    side = table(spark, sf_dir, "documents").select(
-        "doc_id", in_corpus.alias("in_corpus")
-    )
-    corpus_index = bands.join(
-        side.filter("in_corpus").select("doc_id"), "doc_id"
-    ).select(F.col("doc_id").alias("corpus_id"), "band", "bucket")
-    batch_probe = bands.join(
-        side.filter(~F.col("in_corpus")).select("doc_id"), "doc_id"
-    ).select(F.col("doc_id").alias("new_id"), "band", "bucket")
-    candidates = (
-        batch_probe.join(corpus_index, ["band", "bucket"])
-        .select("new_id", "corpus_id")
-        .distinct()
-    )
-    # Token-table verify (VERDICT r13 #6): 8-byte hashes only, same
-    # arithmetic as the oracle's string-set jaccard absent collisions.
-    return verify_candidates(
-        candidates.select(
-            F.col("new_id").alias("d1"), F.col("corpus_id").alias("d2")
-        ),
-        shingled,
-    ).select(
-        F.col("d1").alias("new_id"),
-        F.col("d2").alias("corpus_id"),
-        "jaccard",
-    )
+    """``incremental_lsh_pairs`` on ``MD5_MINHASH``: the batch's band keys
+    probe the corpus index, candidates are exact-Jaccard verified — the
+    whole index-probe pipeline hash-verifies against DuckDB, up to a
+    64-bit band-bucket collision as in ``q_dedup_minhash_oracled``."""
+    return incremental_lsh_pairs(spark, sf_dir, MD5_MINHASH)
 
 
 @query(
@@ -2301,7 +1866,6 @@ def q_dedup_semantic_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold compare is bit-stable.
     """
     from .graph import connected_components_star
-    from .similarity import _dot, _norm
 
     emb = spread(table(spark, sf_dir, "embeddings")).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")

@@ -1373,14 +1373,17 @@ def q_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     logic runs over ``q_sim_ann_lsh``/``_ivf``/``_pq`` shortlists, and
     ``q_sim_ann_recall`` audits exactly how much the swap costs.
     """
-    from .similarity import _QUERY_VEC_IDS, _TOP_K, _dot, _embeddings
+    from .similarity import (
+        _QUERY_VEC_IDS,
+        _TOP_K,
+        _dot,
+        _embeddings,
+        _query_vectors,
+    )
 
     emb = _embeddings(spark, sf_dir)
-    q = emb.filter(F.col("vec_id").isin(*_QUERY_VEC_IDS)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.col("n").alias("qn"),
-        F.col("label").cast("long").alias("true_label"),
+    q = _query_vectors(
+        emb, _QUERY_VEC_IDS, F.col("label").cast("long").alias("true_label")
     )
     scored = emb.join(
         F.broadcast(q), F.col("vec_id") != F.col("query_id")

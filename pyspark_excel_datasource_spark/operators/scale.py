@@ -659,6 +659,8 @@ _BLOOM_LITERAL_MEMO: dict[str, tuple[list[int], int]] = {}
 #: handle that dies with its gateway, so an in-process session restart
 #: must rebuild rather than reuse a stale handle.
 _BLOOM_COLUMN_MEMO: dict[tuple, F.Column] = {}
+#: entries kept per application (each pins one 8 KiB JVM literal)
+_BLOOM_COLUMN_MEMO_MAX = 8
 
 
 def build_bloom_words(dim: DataFrame, dim_key: str) -> tuple[list[int], int]:
@@ -723,7 +725,13 @@ def bloom_semi_join(
     key = (app_id, tuple(arr))
     bloom = _BLOOM_COLUMN_MEMO.get(key)
     if bloom is None:
-        _BLOOM_COLUMN_MEMO.clear()  # stale-gateway handles are useless
+        # evict only other applications' entries (stale-gateway handles
+        # are useless), so word arrays used in turn all stay memoized;
+        # past the bound the oldest entry goes
+        for stale in [k for k in _BLOOM_COLUMN_MEMO if k[0] != app_id]:
+            del _BLOOM_COLUMN_MEMO[stale]
+        while len(_BLOOM_COLUMN_MEMO) >= _BLOOM_COLUMN_MEMO_MAX:
+            del _BLOOM_COLUMN_MEMO[next(iter(_BLOOM_COLUMN_MEMO))]
         bloom = F.lit([int(w) for w in arr]).cast("array<bigint>")
         _BLOOM_COLUMN_MEMO[key] = bloom
 

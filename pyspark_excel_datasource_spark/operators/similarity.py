@@ -5,26 +5,45 @@
   streams once; per-query top-k via window. DuckDB-oracled.
 - ``q_sim_selfjoin``: exact pairwise similarity join above a threshold.
   DuckDB-oracled.
-- ``q_sim_ann_lsh`` : the scale path — banded random-hyperplane (sign)
-  LSH: 64 seeded hyperplane bits in 16 bands, inverted-index explode,
-  bucket equi-join for candidates, exact cosine re-rank of candidates
-  only. Approximate recall ⇒ rows-only.
+- ``q_sim_ann_lsh`` / ``q_sim_ann_ivf`` / ``q_sim_ann_pq``: the scale
+  paths — banded random-hyperplane (sign) LSH, an inverted file over
+  coarse centroids, and product quantization with asymmetric-distance
+  (ADC) scoring. Each has ONE builder (``ann_lsh_topk``,
+  ``ann_ivf_topk``, ``pq_topk``) that takes its hash family or codebook
+  as a frozen record argument:
 
-All cosine math is built-in higher-order array functions (zip_with +
-aggregate) over ``array<double>`` — JVM-side, no UDFs. Sequential fold
-order matches DuckDB's list_sum, so thresholds compare bit-stably.
+  * the md5 integer family (``MD5_LSH``, ``MD5_IVF``, ``MD5_PQ``) —
+    hyperplanes, anchors and codebooks derived from md5 and applied to
+    FLOOR(e*1000)-quantized vectors in int64, so DuckDB replays every
+    bucket decision exactly. The registered gate names use it, and their
+    oracles hash-verify the whole pipeline;
+  * the engine-native family (``GAUSSIAN_LSH``, ``KMEANS_IVF``,
+    ``TRAINED_PQ``) — seeded Gaussian hyperplanes and sample-trained
+    float centroids/codebooks. Better recall, but numpy-only, so it is
+    judged by in-plan recall verdicts (``q_sim_ann_recall``,
+    ``q_sim_ann_pq_native_audit``, ``audit.q_approx_audit``) and timed by
+    ``benchmark.py`` through the ``q_sim_ann_*_native`` functions.
+
+Cosine math is built-in higher-order array functions (zip_with +
+aggregate) over ``array<double>`` — JVM-side. Sequential fold order
+matches DuckDB's list_sum, so thresholds compare bit-stably. The one
+Python stage per approximate plan is an Arrow-vectorized signature,
+assignment or encoding pass (one numpy matmul per batch).
 
 100 TB design: brute force is O(Q×N) per query batch — fine for small Q
-with a broadcast; the LSH variant buckets N once (shuffle on 16-bit key ⇒
-~65k buckets, AQE coalesces) and only re-ranks within buckets. IVF would
-replace the hash with k-means centroids; the plumbing (bucket → rerank)
-is identical. Exact-then-prune top-k staging mirrors the candidate/verify
-split used by distributed top-k similarity systems (EDBT 2020 / ICDE 2021
-REPOSE / SIGMOD 2020 CASS, PAPERS.md): cheap signatures bound the
-candidate set, exact scoring ranks only candidates.
+with a broadcast; the approximate builders share one candidate →
+exact-rerank → top-k tail, and only the candidate stage differs (bucket
+equi-join, probed inverted lists, or an ADC shortlist). Exact-then-prune
+top-k staging mirrors the candidate/verify split used by distributed
+top-k similarity systems (EDBT 2020 / ICDE 2021 REPOSE / SIGMOD 2020
+CASS, PAPERS.md): cheap signatures bound the candidate set, exact
+scoring ranks only candidates.
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass
+from typing import Callable
 
 import numpy as np
 import pandas as pd
@@ -39,19 +58,6 @@ from ..plans.registry import alias_query, query
 _QUERY_VEC_IDS = (0, 1, 2, 3, 4)
 _TOP_K = 10
 _SELFJOIN_THRESHOLD = 0.42
-#: sign-LSH signature = _LSH_BANDS bands of _LSH_BAND_BITS hyperplane bits.
-#: Candidates come from an equi-join on (band, band_value) — a vector is a
-#: candidate iff it agrees with the query on ALL bits of at least one band.
-#: Tuning math (p = per-bit disagreement = acos(cos)/π): per-neighbor recall
-#: is 1-(1-(1-p)^BITS)^BANDS. This corpus's 10th neighbors sit at cos≈0.25
-#: (p≈0.42), so 16 bands × 4 bits ⇒ ~87% recall; strong neighbors
-#: (cos≥0.8, p≈0.2) ⇒ >99.9%. At 100 TB, raise BAND_BITS to sharpen
-#: selectivity per bucket and BANDS to buy recall back — the join shape
-#: (explode → hash join on the bucket key) is unchanged.
-_LSH_BANDS = 16
-_LSH_BAND_BITS = 4
-_LSH_BITS = _LSH_BANDS * _LSH_BAND_BITS
-_LSH_SEED = 42
 
 
 def _dot(x: Column, y: Column) -> Column:
@@ -104,6 +110,41 @@ _SQL_COS = (
 )
 
 
+def _query_vectors(emb: DataFrame, query_ids, *extra: Column) -> DataFrame:
+    """(query_id, qe, qn, *extra) rows of the query set."""
+    return emb.filter(F.col("vec_id").isin(*query_ids)).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("e").alias("qe"),
+        F.col("n").alias("qn"),
+        *extra,
+    )
+
+
+def _cosine() -> Column:
+    """The rounded query↔vector cosine every ranking orders on."""
+    return _cos8().cast("decimal(38,8)").alias("cosine")
+
+
+def _rank_top_k(scored: DataFrame) -> DataFrame:
+    """(query_id, vec_id, cosine) → per-query top-k on the rounded cosine
+    with vec_id tiebreak, so cross-engine ordering is deterministic."""
+    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("int"))
+        .filter(F.col("rank") <= _TOP_K)
+        .select("query_id", "vec_id", canon("cosine").alias("cosine"), "rank")
+    )
+
+
+def exact_topk(emb: DataFrame, query_ids) -> DataFrame:
+    """Brute-force top-k: the broadcast query set against one scan."""
+    scored = emb.join(
+        F.broadcast(_query_vectors(emb, query_ids)),
+        F.col("vec_id") != F.col("query_id"),
+    ).select("query_id", "vec_id", _cosine())
+    return _rank_top_k(scored)
+
+
 @query(
     "q_sim_topk",
     oracle=f"""
@@ -127,31 +168,7 @@ def q_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-{k} for a fixed query-vector set (brute force —
     the ANN correctness baseline). Ranking is on the *rounded* cosine with
     vec_id tiebreak so cross-engine ordering is deterministic."""
-    emb = _embeddings(spark, sf_dir)
-    q = (
-        emb.filter(F.col("vec_id").isin(*_QUERY_VEC_IDS))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("e").alias("qe"),
-            F.col("n").alias("qn"),
-        )
-    )
-    scored = (
-        emb.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            _cos8()
-            .cast("decimal(38,8)")
-            .alias("cosine"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= _TOP_K)
-        .select("query_id", "vec_id", canon("cosine").alias("cosine"), "rank")
-    )
+    return exact_topk(_embeddings(spark, sf_dir), _QUERY_VEC_IDS)
 
 
 @query(
@@ -190,97 +207,201 @@ def q_sim_selfjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def hyperplanes(dim: int, bits: int = _LSH_BITS, seed: int = _LSH_SEED) -> list[list[float]]:
+# ---------------------------------------------------------------------------
+# The md5 integer family: cross-engine weights on quantized vectors
+# ---------------------------------------------------------------------------
+
+#: fixed-point quantization step for the cross-engine integer dot: both
+#: engines compute FLOOR(e*1000) on the same float64, so the quantized
+#: vectors are bit-identical and every signature/bucket decision is exact
+#: int64 arithmetic — no float sign-bit divergence can exist.
+_Q_SCALE = 1000
+
+
+def _md5_weight(*parts: object) -> int:
+    """(md5 of ':'-joined parts → first 15 hex digits) % 2001 - 1000 —
+    the same value DuckDB computes as
+    ``(('0x'||SUBSTR(MD5(a||':'||b),1,15))::UBIGINT::BIGINT % 2001) - 1000``."""
+    import hashlib
+
+    digest = hashlib.md5(":".join(str(p) for p in parts).encode()).hexdigest()
+    return int(digest[:15], 16) % 2001 - 1000
+
+
+def _md5_matrix(prefix: list[object], rows: int, dim: int) -> np.ndarray:
+    return np.asarray(
+        [[_md5_weight(*prefix, i, j) for j in range(dim)] for i in range(rows)],
+        dtype=np.int64,
+    )
+
+
+def _quantize(E: np.ndarray) -> np.ndarray:
+    return np.floor(E * float(_Q_SCALE)).astype(np.int64)
+
+
+def _scorer(weights: np.ndarray):
+    """Maps vectors into the number system of ``weights``: integer (md5)
+    weights score FLOOR(e*1000)-quantized vectors in exact int64.
+
+    A UDF pickles ``_quantize`` by reference, so its Python workers
+    import this package — and with it the ``_zipcache`` hook that spares
+    every later invocation of a reused worker the pyspark.zip re-read."""
+    return _quantize if weights.dtype.kind == "i" else (lambda E: E)
+
+
+def _width(emb: DataFrame) -> int:
+    return len(emb.select("e").first()["e"])
+
+
+def _lsh_weight_sql(plane: str, dim_idx: str) -> str:
+    return (
+        f"((CAST(('0x' || SUBSTR(MD5({plane} || ':' || {dim_idx}), 1, 15)) "
+        f"AS UBIGINT)::BIGINT % 2001) - 1000)"
+    )
+
+
+#: DuckDB CTEs ``v`` (raw vectors) and ``q`` (their quantization)
+_MD5_VQ_SQL = f"""v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+    q AS (SELECT vec_id, e,
+                 [CAST(FLOOR(x * {_Q_SCALE}) AS BIGINT) for x in e] AS qv
+          FROM v)"""
+
+
+def _rerank_sql(pairs: str) -> str:
+    """DuckDB exact re-rank + top-k over a (query_id, vec_id) CTE."""
+    return f"""scored AS (
+        SELECT c.query_id, c.vec_id,
+               CAST(ROUND({_SQL_COS.format(a='qq.e', b='dd.e')}, 8)
+                    AS DECIMAL(38,8)) AS cosine
+        FROM {pairs} c
+        JOIN v qq ON qq.vec_id = c.query_id
+        JOIN v dd ON dd.vec_id = c.vec_id
+    )
+    SELECT query_id, vec_id, CAST(cosine AS VARCHAR) AS cosine,
+           CAST(rn AS INT) AS rank
+    FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+                ORDER BY cosine DESC, vec_id) AS rn FROM scored)
+    WHERE rn <= {_TOP_K}"""
+
+
+# ---------------------------------------------------------------------------
+# Sign-LSH: banded random hyperplanes → bucket equi-join → exact re-rank
+# ---------------------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class SignLSH:
+    """A sign-LSH family: ``bands`` bands of ``_LSH_BAND_BITS`` hyperplane
+    bits; ``planes(n, dim)`` returns the n × dim hyperplane matrix
+    (integer planes switch the signature to quantized int64 dots).
+
+    Tuning math (p = per-bit disagreement = acos(cos)/π): per-neighbor
+    recall is 1-(1-(1-p)^bits)^bands. This corpus's 10th neighbors
+    sit at cos≈0.25 (p≈0.42), so 16 bands × 4 bits ⇒ ~87% recall; strong
+    neighbors (cos≥0.8, p≈0.2) ⇒ >99.9%. At 100 TB, raise the band bits to
+    sharpen selectivity per bucket and bands to buy recall back — the
+    join shape (explode → hash join on the bucket key) is unchanged."""
+
+    bands: int
+    planes: Callable[[int, int], np.ndarray]
+
+
+_LSH_BAND_BITS = 4
+_LSH_SEED = 42
+
+
+def hyperplanes(dim: int, bits: int = 64, seed: int = _LSH_SEED) -> list[list[float]]:
     """Deterministic random hyperplanes for sign-LSH (fixed seed — SURVEY
     §7.4-4: reproducibility is a requirement, not a nicety)."""
     rng = np.random.default_rng(seed)
     return rng.standard_normal((bits, dim)).tolist()
 
 
-def band_signature_udf(planes: list[list[float]]):
-    """Arrow-vectorized signature computation: one numpy matmul per batch.
+GAUSSIAN_LSH = SignLSH(
+    16, lambda n, dim: np.asarray(hyperplanes(dim, n), dtype=np.float64)
+)
+MD5_LSH = SignLSH(8, lambda n, dim: _md5_matrix([], n, dim))
 
-    Spelling the 64 hyperplane dots as built-in fold expressions makes a
+
+def _band_udf(lsh: SignLSH, dim: int):
+    """Arrow-vectorized signature: one (batch × dim) @ (dim × bits) matmul
+    per batch, band b packing its sign bits into one small int.
+
+    Spelling the hyperplane dots as built-in fold expressions makes a
     ~4k-literal-node plan whose analysis/codegen dwarfs the actual math;
-    a pandas_udf doing ``(batch × dim) @ (dim × bits)`` is the honest
-    scale design for hyperplane signatures (one Arrow round-trip, BLAS
-    inner loop) and keeps the plan tiny. Returns per-band bucket values
-    (band b packs its ``_LSH_BAND_BITS`` sign bits into one small int).
-    """
+    the pandas_udf keeps the plan tiny."""
     from pyspark.sql.functions import pandas_udf
 
-    P = np.asarray(planes, dtype=np.float64).T  # dim × bits
-    weights = (2 ** np.arange(_LSH_BAND_BITS)).astype(np.int64)
+    bands, band_bits = lsh.bands, _LSH_BAND_BITS
+    P = lsh.planes(bands * band_bits, dim).T  # dim × bits
+    weights = (2 ** np.arange(band_bits)).astype(np.int64)
+    quant = _scorer(P)
 
     @pandas_udf("array<int>")
     def sig(col: pd.Series) -> pd.Series:
-        E = np.stack(col.to_numpy())  # batch × dim
-        bits = (E @ P) >= 0.0  # batch × (bands*band_bits)
-        bands = bits.reshape(len(E), _LSH_BANDS, _LSH_BAND_BITS) @ weights
-        return pd.Series([row.astype(np.int32).tolist() for row in bands])
+        E = quant(np.stack(col.to_numpy()))  # batch × dim
+        bits = (E @ P) >= 0  # batch × (bands*band_bits)
+        packed = bits.reshape(len(E), bands, band_bits) @ weights
+        return pd.Series([row.astype(np.int32).tolist() for row in packed])
 
     return sig
 
 
-def q_sim_ann_lsh_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate top-k: banded random-hyperplane LSH → bucket **equi-join**
-    candidates → exact cosine re-rank of candidates only.
-
-    Bench-only since round 11: the gate name ``q_sim_ann_lsh`` carries the
-    md5 cross-engine plan (hash-verifiable); this float-hyperplane form
-    stays the quality path, recall-audited by ``q_sim_ann_recall``.
-
-    Scale shape (the point of this operator vs the q_sim_topk baseline):
-
-    1. every vector posexplodes to ``_LSH_BANDS`` rows keyed
-       ``(band, band_value)`` — the inverted index;
-    2. the (tiny) query set explodes the same way and **hash-joins** on the
-       bucket key — never a nested-loop predicate over N, so the work is
-       per-bucket, partitionable, and AQE-coalesced;
-    3. candidate (query, vector) pairs dedup, re-join their vectors by key,
-       and only those pairs pay the exact cosine.
-
-    This mirrors q_dedup_minhash's band join (dedup.py) — one design for
-    both text and vector near-neighbor search.
-    """
-    return ann_lsh_topk(_embeddings(spark, sf_dir), list(_QUERY_VEC_IDS))
+def _md5_bands_sql() -> str:
+    """DuckDB CTEs ``v``/``q``/``dots``/``bands``: ``MD5_LSH``'s band
+    values per vector, bit r of band b = sign of the int64 dot with
+    plane b*bits + r."""
+    bits = _LSH_BAND_BITS
+    return f"""{_MD5_VQ_SQL},
+    dots AS (
+        SELECT q.vec_id, t.i AS plane,
+               LIST_SUM([{_lsh_weight_sql('t.i', '(j - 1)')} * qv[j]
+                         for j in RANGE(1, LEN(qv) + 1)]) AS dot
+        FROM q, RANGE(0, {MD5_LSH.bands * bits}) t(i)
+    ),
+    bands AS (
+        SELECT vec_id, plane // {bits} AS band,
+               SUM(CASE WHEN dot >= 0
+                        THEN 1 << (plane % {bits}) ELSE 0 END) AS bval
+        FROM dots GROUP BY vec_id, plane // {bits}
+    )"""
 
 
-def banded_signatures(emb: DataFrame) -> DataFrame:
+def banded_signatures(emb: DataFrame, lsh: SignLSH = GAUSSIAN_LSH) -> DataFrame:
     """Attach the banded LSH signature column to a vector frame and cache
     it. The signature table IS the index: every consumer (inverted index,
     query set, candidate re-join, the self-join in
-    ``dedup.q_dedup_embed_lsh``) reads it repeatedly — at scale this is
+    ``dedup.embed_lsh_canonical``) reads it repeatedly — at scale this is
     the persisted signature/index table every ANN system materializes
-    once, not a per-query luxury. One shared construction point so the
-    banding parameters can never drift between the text and vector
-    near-neighbor operators."""
-    dim = len(emb.select("e").first()["e"])
-    return emb.withColumn(
-        "bands", band_signature_udf(hyperplanes(dim))(F.col("e"))
-    ).cache()
+    once, not a per-query luxury."""
+    return emb.withColumn("bands", _band_udf(lsh, _width(emb))(F.col("e"))).cache()
 
 
-def ann_lsh_topk(emb: DataFrame, query_ids: list[int]) -> DataFrame:
+def ann_lsh_topk(
+    emb: DataFrame, query_ids, lsh: SignLSH = GAUSSIAN_LSH
+) -> DataFrame:
     """(vec_id, e, n) + query ids → approximate top-k via the banded
-    bucket join — the reusable operator behind ``q_sim_ann_lsh`` (also
-    driven at 10× by ``tools/scale_stress.py``)."""
-    signed = banded_signatures(emb)
-    # inverted index: one row per (vector, band) with the band's bucket value
+    bucket join — the operator behind ``q_sim_ann_lsh`` (also driven at
+    10× by ``tools/scale_stress.py``):
+
+    1. every vector posexplodes to one ``(band, band_value)`` row per
+       band — the inverted index;
+    2. the (tiny) query set explodes the same way and **hash-joins** on
+       the bucket key — never a nested-loop predicate over N;
+    3. candidate (query, vector) pairs dedup, re-join their vectors by
+       key, and only those pairs pay the exact cosine.
+
+    This mirrors the MinHash band join (dedup.py) — one design for both
+    text and vector near-neighbor search."""
+    signed = banded_signatures(emb, lsh)
     buckets = signed.select(
         "vec_id", F.posexplode("bands").alias("band", "bval")
     )
-    qvec = signed.filter(F.col("vec_id").isin(*query_ids)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.col("n").alias("qn"),
-        F.col("bands").alias("qbands"),
-    )
+    qvec = _query_vectors(signed, query_ids, F.col("bands").alias("qbands"))
     qbuckets = qvec.select(
         "query_id", F.posexplode("qbands").alias("band", "bval")
     )
-    # bucket equi-join (hash join on the composite key), then dedup pairs:
-    # a pair can collide in up to _LSH_BANDS buckets but must score once.
+    # a pair can collide in several bands but must score once
     candidates = (
         buckets.join(F.broadcast(qbuckets), ["band", "bval"])
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -290,68 +411,67 @@ def ann_lsh_topk(emb: DataFrame, query_ids: list[int]) -> DataFrame:
     scored = (
         candidates.join(signed.select("vec_id", "e", "n"), "vec_id")
         .join(F.broadcast(qvec.select("query_id", "qe", "qn")), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            _cos8()
-            .cast("decimal(38,8)")
-            .alias("cosine"),
-        )
+        .select("query_id", "vec_id", _cosine())
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= _TOP_K)
-        .select("query_id", "vec_id", canon("cosine").alias("cosine"), "rank")
-    )
+    return _rank_top_k(scored)
+
+
+def q_sim_ann_lsh_native(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``ann_lsh_topk`` on ``GAUSSIAN_LSH`` (16×4 seeded hyperplanes) —
+    the quality/bench path, recall-audited by ``q_sim_ann_recall``."""
+    return ann_lsh_topk(_embeddings(spark, sf_dir), _QUERY_VEC_IDS)
+
+
+@query(
+    "q_sim_ann_lsh_oracled",
+    oracle=f"""
+    WITH {_md5_bands_sql()},
+    cand AS (
+        SELECT DISTINCT qb.vec_id AS query_id, db.vec_id AS vec_id
+        FROM bands qb
+        JOIN bands db ON qb.band = db.band AND qb.bval = db.bval
+        WHERE qb.vec_id IN {_QUERY_VEC_IDS} AND db.vec_id <> qb.vec_id
+    ),
+    {_rerank_sql('cand')}
+    """,
+)
+def q_sim_ann_lsh_oracled(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``ann_lsh_topk`` on ``MD5_LSH``: quantize → md5 integer hyperplanes
+    → 8×4 banding → bucket equi-join candidates → exact cosine re-rank →
+    top-k, hash-verified against DuckDB end to end. (The oracle spells
+    the band join over all (vec, band) rows because DuckDB has no
+    partitioned-index idiom — the Spark side is the real banded design.)
+    """
+    return ann_lsh_topk(_embeddings(spark, sf_dir), _QUERY_VEC_IDS, MD5_LSH)
+
+
+alias_query("q_sim_ann_lsh", "q_sim_ann_lsh_oracled")
+
+
+# ---------------------------------------------------------------------------
+# IVF: nearest-centroid buckets → probe the nearest lists → exact re-rank
+# ---------------------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class IVFQuantizer:
+    """An inverted-file coarse quantizer: ``centroids(emb)`` returns the
+    k × dim centroid matrix (integer centroids score quantized int64
+    dots)."""
+
+    centroids: Callable[[DataFrame], np.ndarray]
 
 
 _IVF_K = 16
-_IVF_ITERS = 3
+#: each query probes its 2 nearest lists
 _IVF_PROBES = 2
-
-
-def _assign_udf(cents: list[tuple[int, list[float]]]):
-    """Arrow-vectorized nearest-centroid assignment: one ``E @ C.T`` per
-    batch, argmax with lowest-cid tiebreak (np.argmax takes the first
-    maximum; centroid rows are ordered by cid). Replaces a k-way
-    crossJoin + window rank — the centroid matrix rides along as a
-    closure, exactly like a broadcast variable."""
-    from pyspark.sql.functions import pandas_udf
-
-    C = np.asarray([v for _, v in cents], dtype=np.float64)  # k × dim
-
-    @pandas_udf("int")
-    def nearest(col: pd.Series) -> pd.Series:
-        E = np.stack(col.to_numpy())
-        return pd.Series(np.argmax(E @ C.T, axis=1).astype(np.int32))
-
-    return nearest
-
-
-def _probe_udf(cents: list[tuple[int, list[float]]], nprobe: int):
-    """Top-``nprobe`` centroid ids per query vector (sim desc, cid asc)."""
-    from pyspark.sql.functions import pandas_udf
-
-    C = np.asarray([v for _, v in cents], dtype=np.float64)
-
-    @pandas_udf("array<int>")
-    def probes(col: pd.Series) -> pd.Series:
-        E = np.stack(col.to_numpy())
-        sims = E @ C.T
-        # stable argsort on -sims ⇒ ties resolve to the lower cid
-        order = np.argsort(-sims, axis=1, kind="stable")[:, :nprobe]
-        return pd.Series([row.astype(np.int32).tolist() for row in order])
-
-    return probes
-
-
+_IVF_ITERS = 3
 #: deterministic IVF training sample: the lowest vec_ids (same bounded
-#: driver-side pattern as the PQ codebook's ``_PQ_TRAIN``)
+#: driver-side pattern as the PQ codebook's training sample)
 _IVF_TRAIN = 512
 
 
-def _centroids(emb: DataFrame, k: int = _IVF_K, iters: int = _IVF_ITERS) -> list[tuple[int, list[float]]]:
+def _centroids(emb: DataFrame, k: int = _IVF_K, iters: int = _IVF_ITERS) -> np.ndarray:
     """Deterministic mini k-means (Lloyd) trained on a bounded sample.
 
     Init = the k lowest vec_ids (deterministic, no RNG); Lloyd then runs
@@ -359,11 +479,10 @@ def _centroids(emb: DataFrame, k: int = _IVF_K, iters: int = _IVF_ITERS) -> list
     vec_ids — one bounded collect total, NOT one full-corpus pass per
     iteration. Training an IVF coarse quantizer on a sample is the
     standard build (the index is k rows regardless of corpus size; only
-    the final ASSIGNMENT touches every vector), and at 100 TB the
-    previous full-corpus Lloyd would have cost ``iters`` extra corpus
-    scans for a 16-row artifact. Assignment uses argmax dot with
-    first-occurrence (lowest-cid) tie-breaks, update is the float64
-    mean — the same rules the distributed assignment UDF applies."""
+    the final ASSIGNMENT touches every vector). Assignment uses argmax
+    dot with first-occurrence (lowest-cid) tie-breaks, update is the
+    float64 mean — the same rules the distributed assignment UDF
+    applies."""
     sample = np.stack(
         [
             r.e
@@ -385,88 +504,138 @@ def _centroids(emb: DataFrame, k: int = _IVF_K, iters: int = _IVF_ITERS) -> list
             members = sample[cid == c]
             if len(members):
                 C[c] = members.mean(axis=0)
-    return [(i, C[i].tolist()) for i in range(k)]
+    return C
 
 
-def q_sim_ann_ivf_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF approximate top-k: k-means-bucketed inverted file, probe the
-    ``nprobe`` centroids nearest each query, exact re-rank inside probed
-    buckets only.
+KMEANS_IVF = IVFQuantizer(_centroids)
+MD5_IVF = IVFQuantizer(lambda emb: _md5_matrix(["a"], _IVF_K, _width(emb)))
 
-    The other scale path next to sign-LSH (q_sim_ann_lsh): data is
-    partitioned once by nearest centroid (one shuffle), queries touch
-    nprobe/k of the table. Fully deterministic: centroid init is the k
-    lowest vec_ids, ties broken by centroid id.
-    """
-    # cache: the vector table feeds the bounded training sample, the
-    # final assignment, and the probe scoring — three reads
-    emb = _embeddings(spark, sf_dir).cache()
-    cents = _centroids(emb)
-    # assign every vector to its nearest centroid (bucket) — one
-    # vectorized matmul per Arrow batch, no crossJoin, no window
+
+def _nearest_udf(C: np.ndarray, top: int):
+    """Top-``top`` centroid ids per vector by dot (dot desc, id asc —
+    the stable argsort matches the SQL ROW_NUMBER order). The centroid
+    matrix rides along as a closure, exactly like a broadcast
+    variable."""
+    from pyspark.sql.functions import pandas_udf
+
+    quant = _scorer(C)
+
+    @pandas_udf("array<int>")
+    def nearest(col: pd.Series) -> pd.Series:
+        dots = quant(np.stack(col.to_numpy())) @ C.T  # batch × k
+        order = np.argsort(-dots, axis=1, kind="stable")[:, :top]
+        return pd.Series([row.astype(np.int32).tolist() for row in order])
+
+    return nearest
+
+
+def ann_ivf_topk(
+    emb: DataFrame, query_ids, ivf: IVFQuantizer = KMEANS_IVF
+) -> DataFrame:
+    """IVF top-k: data is partitioned once by nearest centroid (one
+    vectorized matmul per Arrow batch, no crossJoin, no window), each
+    query probes its nearest lists, and candidates get the exact
+    re-rank — queries touch probes/k of the table."""
+    C = ivf.centroids(emb)
     assigned = emb.select(
-        "vec_id", "e", "n", _assign_udf(cents)(F.col("e")).alias("bucket")
+        "vec_id", "e", "n", _nearest_udf(C, 1)(F.col("e"))[0].alias("bucket")
     )
-    # each query probes its nprobe nearest buckets
-    probes = (
-        emb.filter(F.col("vec_id").isin(*_QUERY_VEC_IDS))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("e").alias("qe"),
-            F.col("n").alias("qn"),
-            F.explode(_probe_udf(cents, _IVF_PROBES)(F.col("e"))).alias("bucket"),
-        )
+    probes = _query_vectors(
+        emb,
+        query_ids,
+        F.explode(_nearest_udf(C, _IVF_PROBES)(F.col("e"))).alias("bucket"),
     )
     scored = (
         assigned.join(F.broadcast(probes), "bucket")
         .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            _cos8()
-            .cast("decimal(38,8)")
-            .alias("cosine"),
-        )
+        .select("query_id", "vec_id", _cosine())
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= _TOP_K)
-        .select("query_id", "vec_id", canon("cosine").alias("cosine"), "rank")
-    )
+    return _rank_top_k(scored)
+
+
+def q_sim_ann_ivf_native(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``ann_ivf_topk`` on ``KMEANS_IVF`` (Lloyd-trained centroids, the
+    quality path; recall-audited by ``q_approx_audit``). The vector
+    table is cached: it feeds the training sample, the assignment and
+    the probe scoring."""
+    return ann_ivf_topk(_embeddings(spark, sf_dir).cache(), _QUERY_VEC_IDS)
+
+
+@query(
+    "q_sim_ann_ivf_oracled",
+    oracle=f"""
+    WITH {_MD5_VQ_SQL},
+    adots AS (
+        SELECT q.vec_id, t.c AS anchor,
+               LIST_SUM([{_lsh_weight_sql("'a:' || t.c", '(j - 1)')} * qv[j]
+                         for j in RANGE(1, LEN(qv) + 1)]) AS dot
+        FROM q, RANGE(0, {_IVF_K}) t(c)
+    ),
+    ranked AS (
+        SELECT vec_id, anchor,
+               ROW_NUMBER() OVER (PARTITION BY vec_id
+                                  ORDER BY dot DESC, anchor) AS rn
+        FROM adots
+    ),
+    buckets AS (SELECT vec_id, anchor FROM ranked WHERE rn = 1),
+    probes AS (SELECT vec_id AS query_id, anchor FROM ranked
+               WHERE rn <= {_IVF_PROBES}
+                 AND vec_id IN {_QUERY_VEC_IDS}),
+    cand AS (
+        SELECT DISTINCT p.query_id, b.vec_id
+        FROM probes p JOIN buckets b ON b.anchor = p.anchor
+        WHERE b.vec_id <> p.query_id
+    ),
+    {_rerank_sql('cand')}
+    """,
+)
+def q_sim_ann_ivf_oracled(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``ann_ivf_topk`` on ``MD5_IVF``: bucket assignment is argmax over
+    16 md5-derived integer anchor vectors (int64 dots on quantized
+    embeddings — exact in both engines), queries probe their top-2
+    anchors, candidates get the exact cosine re-rank. Hash-verifies the
+    inverted-file pipeline end to end."""
+    return ann_ivf_topk(_embeddings(spark, sf_dir), _QUERY_VEC_IDS, MD5_IVF)
+
+
+alias_query("q_sim_ann_ivf", "q_sim_ann_ivf_oracled")
 
 
 # ---------------------------------------------------------------------------
 # Product quantization (PQ) — the memory-compressed ANN scale path
 # ---------------------------------------------------------------------------
 
+
+@dataclass(frozen=True)
+class PQCodebook:
+    """A PQ codebook source: ``books(sample)`` returns the (M, K, d_sub)
+    codebook from the ``train_rows`` lowest-vec_id vectors (0 = a fixed
+    codebook); the ADC shortlist keeps ``refine`` × k rows per query.
+
+    Float codebooks rank the shortlist on the ADC cosine; integer (md5)
+    codebooks encode quantized vectors and rank on the exact int64 ADC
+    inner product, which DuckDB reproduces bit for bit."""
+
+    refine: int
+    train_rows: int
+    books: Callable[[np.ndarray], np.ndarray]
+
+
 _PQ_M = 8        # subspaces (64-dim vectors → 8 sub-vectors of 8 dims)
 _PQ_K = 64       # centroids per subspace (6-bit codes)
-_PQ_TRAIN = 512  # deterministic training sample: the lowest vec_ids
 _PQ_ITERS = 5
-_PQ_REFINE = 8   # exact re-rank depth: ADC keeps top REFINE*k candidates
-
-
-def _pq_codebook(emb: DataFrame) -> np.ndarray:
-    """Train the per-subspace codebooks on a deterministic driver-side
-    sample (the ``_PQ_TRAIN`` lowest vec_ids).
-
-    Codebook training on a sample is the standard PQ build (the codebook
-    is M×K×d_sub floats — here 8×64×8 — regardless of corpus size; only
-    ENCODING touches every vector). Lloyd iterations in float64 numpy
-    with first-occurrence argmin ties → fully deterministic, no RNG.
-    Returns an (M, K, d_sub) array.
-    """
-    sample = np.stack(
-        [r.e for r in emb.orderBy("vec_id").limit(_PQ_TRAIN).select("e").collect()]
-    )
-    return _pq_train(sample)
+_MD5_PQ_M = 4     # subspaces (64-dim → 4 sub-vectors of 16 dims)
+_MD5_PQ_DSUB = 16
+_MD5_PQ_K = 16    # centroids per subspace
 
 
 def _pq_train(sample: np.ndarray) -> np.ndarray:
-    """Lloyd iterations over an already-collected training sample (the
-    numpy half of :func:`_pq_codebook`, split out so ``pq_topk`` can
-    fetch the training rows and the query rows in ONE driver job)."""
+    """Per-subspace Lloyd iterations over the training sample.
+
+    Codebook training on a sample is the standard PQ build (the codebook
+    is M×K×d_sub floats — here 8×64×8 — regardless of corpus size; only
+    ENCODING touches every vector). float64 numpy with first-occurrence
+    argmin ties → fully deterministic, no RNG."""
     if len(sample) < _PQ_K:
         raise ValueError(
             f"PQ codebook needs >= {_PQ_K} training vectors for the "
@@ -489,17 +658,38 @@ def _pq_train(sample: np.ndarray) -> np.ndarray:
     return books
 
 
+def _md5_codebooks() -> np.ndarray:
+    """md5-derived integer codebooks, shape (M, K, d_sub) — the same
+    cross-engine weight family as the hyperplanes/anchors, addressed as
+    md5('pq:<m>:<k>:<j>')."""
+    return np.asarray(
+        [
+            [
+                [_md5_weight("pq", m, k, j) for j in range(_MD5_PQ_DSUB)]
+                for k in range(_MD5_PQ_K)
+            ]
+            for m in range(_MD5_PQ_M)
+        ],
+        dtype=np.int64,
+    )
+
+
+TRAINED_PQ = PQCodebook(8, 512, _pq_train)
+MD5_PQ = PQCodebook(4, 0, lambda sample: _md5_codebooks())
+
+
 def _pq_encode_udf(books: np.ndarray):
-    """Arrow-vectorized PQ encoder: one (batch × M × d_sub) distance
-    computation per Arrow batch. The codebook rides along as a closure
-    (a broadcast variable in cluster terms — 8×64×8 floats)."""
+    """Arrow-vectorized PQ encoder: codes[m] = argmin_k ||x_m - C[m,k]||²
+    (ties to the lowest k). The codebook rides along as a closure (a
+    broadcast variable in cluster terms)."""
     from pyspark.sql.functions import pandas_udf
 
     M, K, d_sub = books.shape
+    quant = _scorer(books)
 
     @pandas_udf("array<int>")
-    def encode(col: pd.Series) -> pd.Series:
-        E = np.stack(col.to_numpy())  # batch × dim
+    def enc(col: pd.Series) -> pd.Series:
+        E = quant(np.stack(col.to_numpy()))  # batch × dim
         Es = E.reshape(len(E), M, d_sub)
         codes = np.empty((len(E), M), dtype=np.int32)
         for m in range(M):
@@ -507,252 +697,212 @@ def _pq_encode_udf(books: np.ndarray):
             codes[:, m] = np.argmin(d2, axis=1)
         return pd.Series([row.tolist() for row in codes])
 
-    return encode
+    return enc
 
 
-def pq_topk(emb: DataFrame, query_ids: list[int]) -> DataFrame:
+def pq_topk(
+    emb: DataFrame, query_ids, codebook: PQCodebook = TRAINED_PQ
+) -> DataFrame:
     """(vec_id, e, n) + query ids → PQ/ADC top-k with exact refine — the
-    reusable operator behind ``q_sim_ann_pq`` (also driven at 10× by
-    ``tools/scale_stress.py``)."""
+    operator behind ``q_sim_ann_pq`` (also driven at 10× by
+    ``tools/scale_stress.py``).
+
+    PQ attacks the MEMORY axis: the scan reads M small ints per vector
+    instead of ``dim`` doubles. Per query the driver precomputes an M×K
+    table of sub-dot-products against the codebook; approximate
+    dot(q, x) = Σ_m LUT[m, code_m] — a built-in higher-order aggregate
+    over the code array, no Python in the scoring path — then an exact
+    cosine refine of the shortlist only. True vector norms are kept
+    exact (they compress poorly and cost one double)."""
     spark = emb.sparkSession
-    # ONE driver job fetches both bounded row sets the build needs (r14
-    # opt, guide §5 "the driver should do almost no data work" — but
-    # when it must, batch it): the _PQ_TRAIN lowest-vec_id training rows
-    # and the |queries| query rows, tagged so they split client-side.
-    # The union's row order is not contractual, so the training sample
-    # is re-sorted by vec_id before the deterministic first-K init.
-    fetched = (
-        emb.orderBy("vec_id")
-        .limit(_PQ_TRAIN)
-        .select(F.lit(0).alias("tag"), "vec_id", "e", "n")
-        .unionByName(
-            emb.filter(F.col("vec_id").isin(*query_ids)).select(
-                F.lit(1).alias("tag"), "vec_id", "e", "n"
-            )
-        )
-        .collect()
+    # ONE driver job fetches the query rows and, for a trained codebook,
+    # the training rows, tagged so they split client-side. The union's
+    # row order is not contractual, so the training sample is re-sorted
+    # by vec_id before the deterministic first-K init.
+    rows = emb.filter(F.col("vec_id").isin(*query_ids)).select(
+        F.lit(1).alias("tag"), "vec_id", "e", "n"
     )
+    if codebook.train_rows:
+        rows = (
+            emb.orderBy("vec_id")
+            .limit(codebook.train_rows)
+            .select(F.lit(0).alias("tag"), "vec_id", "e", "n")
+            .unionByName(rows)
+        )
+    fetched = rows.collect()
     train = sorted((r for r in fetched if r.tag == 0), key=lambda r: r.vec_id)
-    qrows = [r for r in fetched if r.tag == 1]
-    books = _pq_train(np.stack([r.e for r in train]))
-    # one-time encode — the persisted 8-bytes-per-vector code table
+    books = codebook.books(np.asarray([r.e for r in train], dtype=np.float64))
+    integer = books.dtype.kind == "i"
+    M, K, d_sub = books.shape
+    # one-time encode — the persisted M-codes-per-vector table
     codes = emb.select(
         "vec_id", "n", _pq_encode_udf(books)(F.col("e")).alias("codes")
     )
-    # per-query ADC lookup tables, flattened to length M*K (tiny: 5×512)
-    M, K, d_sub = books.shape
+    # per-query ADC lookup tables, flattened to length M*K
+    quant = _scorer(books)
     lut_rows = []
-    for r in qrows:
-        q = np.asarray(r.e).reshape(M, d_sub)
-        lut = np.einsum("ms,mks->mk", q, books).reshape(-1)
-        lut_rows.append((r.vec_id, r.n, lut.tolist()))
-    luts = local_df(spark, 
-        lut_rows, "query_id long, qn double, lut array<double>"
+    for r in fetched:
+        if r.tag == 1:
+            q = quant(np.asarray(r.e, dtype=np.float64))
+            lut = np.einsum("ms,mks->mk", q.reshape(M, d_sub), books).reshape(-1)
+            lut_rows.append((r.vec_id, r.n, lut.tolist()))
+    lut_type = "long" if integer else "double"
+    luts = local_df(
+        spark, lut_rows, f"query_id long, qn double, lut array<{lut_type}>"
     )
+    zero = "CAST(0 AS BIGINT)" if integer else "0D"
     adc = F.expr(
-        f"aggregate(sequence(0, {M - 1}), 0D,"
+        f"aggregate(sequence(0, {M - 1}), {zero},"
         f" (acc, m) -> acc + lut[m * {K} + element_at(codes, m + 1)])"
     )
-    approx = (
-        codes.join(F.broadcast(luts), F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            (adc / (F.col("qn") * F.col("n"))).alias("adc_cosine"),
-        )
+    score = "adc_ip" if integer else "adc_cosine"
+    approx = codes.join(
+        F.broadcast(luts), F.col("vec_id") != F.col("query_id")
+    ).select(
+        "query_id",
+        "vec_id",
+        (adc if integer else adc / (F.col("qn") * F.col("n"))).alias(score),
     )
     # ADC shortlist, then exact re-rank of candidates only (Faiss-style
-    # refine): the full-precision vectors are fetched for REFINE*k rows
+    # refine): the full-precision vectors are fetched for refine*k rows
     # per query, not the whole table.
     wa = W.partitionBy("query_id").orderBy(
-        F.col("adc_cosine").desc(), F.col("vec_id").asc()
+        F.col(score).desc(), F.col("vec_id").asc()
     )
     shortlist = (
         approx.withColumn("arank", F.row_number().over(wa))
-        .filter(F.col("arank") <= _PQ_REFINE * _TOP_K)
+        .filter(F.col("arank") <= codebook.refine * _TOP_K)
         .select("query_id", "vec_id")
     )
-    qvec = (
-        emb.filter(F.col("vec_id").isin(*query_ids))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("e").alias("qe"),
-            F.col("n").alias("qn"),
-        )
-    )
-    rescored = (
+    scored = (
         shortlist.join(emb.select("vec_id", "e", "n"), "vec_id")
-        .join(F.broadcast(qvec), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            _cos8()
-            .cast("decimal(38,8)")
-            .alias("cosine"),
-        )
+        .join(F.broadcast(_query_vectors(emb, query_ids)), "query_id")
+        .select("query_id", "vec_id", _cosine())
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    return (
-        rescored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= _TOP_K)
-        .select("query_id", "vec_id", canon("cosine").alias("cosine"), "rank")
-    )
+    return _rank_top_k(scored)
 
 
 def q_sim_ann_pq_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ/ADC approximate top-k: vectors compressed to M codes from
-    sample-trained per-subspace codebooks, queries scored against the
-    codes via asymmetric-distance lookup tables — entirely JVM-side —
-    then an exact cosine refine of the top shortlist only.
-
-    The third ANN scale path next to sign-LSH (bucket pruning) and IVF
-    (partition pruning): PQ attacks the MEMORY axis — the scan reads
-    M small ints per vector instead of ``dim`` doubles (here 8 codes vs
-    64 doubles, a 16-32× shrink at 100 TB, where the embedding table
-    itself is the bottleneck). Per query the driver precomputes an M×K
-    table of sub-dot-products against the codebook; approximate
-    dot(q, x) = Σ_m LUT[m, code_m] — a built-in higher-order aggregate
-    over the code array, no Python in the scoring path. True vector
-    norms are kept exact (they compress poorly and cost one double).
-    Deterministic end-to-end: sample-trained codebook, first-occurrence
-    argmin encoding, float64 LUT sums, vec_id tiebreak.
-    """
-    emb = _embeddings(spark, sf_dir).cache()
-    return pq_topk(emb, list(_QUERY_VEC_IDS))
+    """``pq_topk`` on ``TRAINED_PQ`` (sample-trained 8×64 float
+    codebooks, refine depth 8) — the quality/bench path, recall-audited
+    by ``q_sim_ann_pq_native_audit`` and ``q_approx_audit``."""
+    return pq_topk(_embeddings(spark, sf_dir).cache(), _QUERY_VEC_IDS)
 
 
-#: per-query recall floor asserted by q_sim_ann_recall: observed LSH
-#: recall@10 on the fixed corpus is 0.7–1.0 per query (sf0.001 + sf0.01);
-#: 0.6 keeps 1-hit margin. Deterministic for fixed input (seeded planes).
+def _md5_pq_weight_sql(m: str, k: str, j: str) -> str:
+    return _lsh_weight_sql(f"'pq:' || {m} || ':' || {k}", j)
+
+
+@query(
+    "q_sim_ann_pq_oracled",
+    oracle=f"""
+    WITH {_MD5_VQ_SQL},
+    dists AS (
+        SELECT q.vec_id, t.m AS m, s.k AS k,
+               LIST_SUM([(qv[t.m * {_MD5_PQ_DSUB} + j]
+                          - {_md5_pq_weight_sql('t.m', 's.k', '(j - 1)')})
+                         * (qv[t.m * {_MD5_PQ_DSUB} + j]
+                            - {_md5_pq_weight_sql('t.m', 's.k', '(j - 1)')})
+                         for j in RANGE(1, {_MD5_PQ_DSUB} + 1)]) AS dist
+        FROM q, RANGE(0, {_MD5_PQ_M}) t(m), RANGE(0, {_MD5_PQ_K}) s(k)
+    ),
+    codes AS (
+        SELECT vec_id, m, k AS code
+        FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, m
+                                           ORDER BY dist, k) AS rn
+              FROM dists)
+        WHERE rn = 1
+    ),
+    adc AS (
+        SELECT qq.vec_id AS query_id, c.vec_id,
+               SUM(LIST_SUM([qq.qv[c.m * {_MD5_PQ_DSUB} + j]
+                             * {_md5_pq_weight_sql('c.m', 'c.code', '(j - 1)')}
+                             for j in RANGE(1, {_MD5_PQ_DSUB} + 1)])) AS adc_ip
+        FROM codes c
+        JOIN q qq ON qq.vec_id IN {_QUERY_VEC_IDS}
+        WHERE c.vec_id <> qq.vec_id
+        GROUP BY qq.vec_id, c.vec_id
+    ),
+    shortlist AS (
+        SELECT query_id, vec_id
+        FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+                    ORDER BY adc_ip DESC, vec_id) AS arank FROM adc)
+        WHERE arank <= {MD5_PQ.refine * _TOP_K}
+    ),
+    {_rerank_sql('shortlist')}
+    """,
+)
+def q_sim_ann_pq_oracled(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``pq_topk`` on ``MD5_PQ``: md5 integer centroids per subspace,
+    int64 argmin encoding, exact integer inner-product ADC, shortlist →
+    exact cosine refine — the whole compress/score/refine pipeline
+    hash-verifies against DuckDB."""
+    return pq_topk(_embeddings(spark, sf_dir).cache(), _QUERY_VEC_IDS, MD5_PQ)
+
+
+alias_query("q_sim_ann_pq", "q_sim_ann_pq_oracled")
+
+
+# ---------------------------------------------------------------------------
+# In-plan recall verdicts for the engine-native families
+# ---------------------------------------------------------------------------
+
+#: per-query recall floor: observed recall@10 on the fixed corpus is
+#: 0.7–1.0 per query for GAUSSIAN_LSH and 0.8–1.0 for TRAINED_PQ (sf0.001
+#: + sf0.01); 0.6 keeps margin. Deterministic for fixed input.
 _RECALL_FLOOR = 0.6
 
-
-@query(
-    "q_sim_ann_recall",
-    oracle=f"""
+_RECALL_ORACLE = f"""
     SELECT vec_id AS query_id,
            {_TOP_K} AS k,
            TRUE AS recall_ok
     FROM embeddings WHERE vec_id IN {_QUERY_VEC_IDS}
-    """,
-)
+    """
+
+
+def _recall_verdict(emb: DataFrame, approx: DataFrame) -> DataFrame:
+    """(query_id, k, recall_ok): recall@k of an approximate top-k against
+    the exact brute-force top-k over the same vectors."""
+    exact = exact_topk(emb, _QUERY_VEC_IDS).select("query_id", "vec_id")
+    hits = exact.join(
+        approx.select("query_id", "vec_id"), ["query_id", "vec_id"], "left_semi"
+    )
+    return (
+        hits.groupBy("query_id")
+        .agg(F.count("*").alias("n_hits"))
+        .select(
+            "query_id",
+            F.lit(_TOP_K).alias("k"),
+            (F.col("n_hits") >= F.lit(int(_RECALL_FLOOR * _TOP_K))).alias(
+                "recall_ok"
+            ),
+        )
+    )
+
+
+@query("q_sim_ann_recall", oracle=_RECALL_ORACLE)
 def q_sim_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN quality audit IN-PLAN: recall@k of the banded-LSH index
+    """ANN quality audit IN-PLAN: recall@k of the ``GAUSSIAN_LSH`` index
     against the exact brute-force top-k, per query — the acceptance test
-    every ANN deployment runs before trusting an index, here expressed
-    as one Spark job whose verdict column the DuckDB oracle hash-checks
-    (same convention as the sketch queries: the approximate structure
-    can't be reproduced cross-engine, so the *contract* is what gets
-    hash-verified; a silent index regression flips recall_ok).
-
-    Cost shape: the exact side is the ``q_sim_topk`` broadcast scan (one
-    pass over the vectors); the ANN side reuses the shared banded
-    signature index (``banded_signatures`` cache); the overlap join is
-    k×|queries| rows. At 100 TB you run this on a sampled query set —
-    the plan is already sample-sized in everything but the one exact
-    scan.
-    """
-    qids = list(_QUERY_VEC_IDS)
+    every ANN deployment runs before trusting an index, here one Spark
+    job whose verdict column the DuckDB oracle hash-checks (the seeded
+    Gaussian planes can't be reproduced cross-engine, so the *contract*
+    is what gets hash-verified; a silent index regression flips
+    recall_ok). At 100 TB you run this on a sampled query set — the plan
+    is already sample-sized in everything but the one exact scan."""
     emb = _embeddings(spark, sf_dir)
-    # build both rankings directly from the plan builders (the registered
-    # q_sim_topk wrapper would clear this query's shared caches)
-    qvecs = emb.filter(F.col("vec_id").isin(*qids)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.col("n").alias("qn"),
-    )
-    scored = emb.join(
-        F.broadcast(qvecs), F.col("vec_id") != F.col("query_id")
-    ).select(
-        "query_id",
-        "vec_id",
-        _cos8()
-        .cast("decimal(38,8)")
-        .alias("cosine"),
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    exact = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOP_K)
-        .select("query_id", "vec_id")
-    )
-    ann = ann_lsh_topk(emb, qids).select("query_id", "vec_id")
-    hits = exact.join(ann, ["query_id", "vec_id"], "left_semi")
-    floor_hits = int(_RECALL_FLOOR * _TOP_K)
-    return (
-        hits.groupBy("query_id")
-        .agg(F.count("*").alias("n_hits"))
-        .select(
-            "query_id",
-            F.lit(_TOP_K).alias("k"),
-            (F.col("n_hits") >= F.lit(floor_hits)).alias("recall_ok"),
-        )
-    )
+    return _recall_verdict(emb, ann_lsh_topk(emb, _QUERY_VEC_IDS))
 
 
-@query(
-    "q_sim_ann_pq_native_audit",
-    oracle=f"""
-    SELECT vec_id AS query_id,
-           {_TOP_K} AS k,
-           TRUE AS recall_ok
-    FROM embeddings WHERE vec_id IN {_QUERY_VEC_IDS}
-    """,
-)
+@query("q_sim_ann_pq_native_audit", oracle=_RECALL_ORACLE)
 def q_sim_ann_pq_native_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hash-pins the EXACT plan the bench headline times (VERDICT r12
-    #4, PQ side): ``pq_topk`` — the sample-trained-codebook fast path
-    behind the ``q_sim_ann_pq`` headline (``benchmark.NATIVE_IMPLS``) —
-    is run ON DATA and its refined top-k is compared per query against
-    the exact brute-force top-k; the driver hash-verifies the
-    ``recall_ok`` verdict (observed native recall@{_TOP_K} is 0.8–1.0
-    per query at sf0.001 and sf0.01; floor {_RECALL_FLOOR} keeps 2-hit
-    margin). Same convention as ``q_sim_ann_recall`` for the LSH index:
-    the trained codebook can't be reproduced cross-engine, so the
-    CONTRACT is what hash-verifies — a silent regression in the encode,
-    the ADC fold, or the refine flips the verdict. The md5 integer-
-    codebook twin ``q_sim_ann_pq`` pins the PQ mechanics bit-for-bit in
-    its own window; with this row the trained plan the bench times
-    carries a driver verdict too.
-    """
-    qids = list(_QUERY_VEC_IDS)
+    """The same recall verdict for ``pq_topk`` on ``TRAINED_PQ`` — the
+    codebook family the ``q_sim_ann_pq`` bench headline times
+    (``benchmark.NATIVE_IMPLS``). A silent regression in the encode, the
+    ADC fold, or the refine flips the verdict; the md5 codebook behind
+    the gate name pins the PQ mechanics bit for bit."""
     emb = _embeddings(spark, sf_dir).cache()
-    qvecs = emb.filter(F.col("vec_id").isin(*qids)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.col("n").alias("qn"),
-    )
-    scored = emb.join(
-        F.broadcast(qvecs), F.col("vec_id") != F.col("query_id")
-    ).select(
-        "query_id",
-        "vec_id",
-        _cos8()
-        .cast("decimal(38,8)")
-        .alias("cosine"),
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    exact = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _TOP_K)
-        .select("query_id", "vec_id")
-    )
-    native = pq_topk(emb, qids).select("query_id", "vec_id")
-    hits = exact.join(native, ["query_id", "vec_id"], "left_semi")
-    floor_hits = int(_RECALL_FLOOR * _TOP_K)
-    return (
-        hits.groupBy("query_id")
-        .agg(F.count("*").alias("n_hits"))
-        .select(
-            "query_id",
-            F.lit(_TOP_K).alias("k"),
-            (F.col("n_hits") >= F.lit(floor_hits)).alias("recall_ok"),
-        )
-    )
+    return _recall_verdict(emb, pq_topk(emb, _QUERY_VEC_IDS))
 
 
 _FUSE_N = 50
@@ -898,468 +1048,3 @@ def q_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(rrf, 9).cast("decimal(38,9)").cast("string").alias("rrf"),
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# Round 7: oracled twins for the ANN paths (VERDICT_r6 #3) — the md5 hash
-# family that made q_dedup_minhash_oracled bit-identical in DuckDB, applied
-# to sign-LSH bands and to the IVF bucket-probe-rerank pipeline.
-# ---------------------------------------------------------------------------
-
-_ORACLED_LSH_BANDS = 8
-_ORACLED_LSH_BITS = 4
-_ORACLED_PLANES = _ORACLED_LSH_BANDS * _ORACLED_LSH_BITS
-_ORACLED_IVF_K = 16
-_ORACLED_IVF_PROBES = 2
-#: fixed-point quantization step for the cross-engine integer dot: both
-#: engines compute FLOOR(e*1000) on the same float64, so the quantized
-#: vectors are bit-identical and every signature/bucket decision is exact
-#: int64 arithmetic — no float sign-bit divergence can exist.
-_Q_SCALE = 1000
-
-
-def _md5_weight(*parts: object) -> int:
-    """(md5 of ':'-joined parts → first 15 hex digits) % 2001 - 1000 —
-    the same value DuckDB computes as
-    ``(('0x'||SUBSTR(MD5(a||':'||b),1,15))::UBIGINT::BIGINT % 2001) - 1000``."""
-    import hashlib
-
-    digest = hashlib.md5(":".join(str(p) for p in parts).encode()).hexdigest()
-    return int(digest[:15], 16) % 2001 - 1000
-
-
-def _md5_matrix(prefix: list[object], rows: int, dim: int) -> np.ndarray:
-    return np.asarray(
-        [[_md5_weight(*prefix, i, j) for j in range(dim)] for i in range(rows)],
-        dtype=np.int64,
-    )
-
-
-def _quantize(E: np.ndarray) -> np.ndarray:
-    return np.floor(E * float(_Q_SCALE)).astype(np.int64)
-
-
-def _oracled_band_udf(dim: int):
-    """Band values from md5-derived integer hyperplanes: bit r of band b =
-    sign of the int64 dot with plane (4b+r). Arrow-vectorized matmul —
-    same batch shape as the float flagship's ``band_signature_udf``."""
-    from pyspark.sql.functions import pandas_udf
-
-    W_ = _md5_matrix([], _ORACLED_PLANES, dim)  # planes × dim
-    weights = (2 ** np.arange(_ORACLED_LSH_BITS)).astype(np.int64)
-
-    @pandas_udf("array<int>")
-    def sig(col: pd.Series) -> pd.Series:
-        Q = _quantize(np.stack(col.to_numpy()))  # batch × dim int64
-        bits = (Q @ W_.T) >= 0  # batch × planes
-        bands = (
-            bits.reshape(len(Q), _ORACLED_LSH_BANDS, _ORACLED_LSH_BITS) @ weights
-        )
-        return pd.Series([row.astype(np.int32).tolist() for row in bands])
-
-    return sig
-
-
-def _lsh_weight_sql(plane: str, dim_idx: str) -> str:
-    return (
-        f"((CAST(('0x' || SUBSTR(MD5({plane} || ':' || {dim_idx}), 1, 15)) "
-        f"AS UBIGINT)::BIGINT % 2001) - 1000)"
-    )
-
-
-@query(
-    "q_sim_ann_lsh_oracled",
-    oracle=f"""
-    WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-    q AS (SELECT vec_id, e,
-                 [CAST(FLOOR(x * {_Q_SCALE}) AS BIGINT) for x in e] AS qv
-          FROM v),
-    dots AS (
-        SELECT q.vec_id, t.i AS plane,
-               LIST_SUM([{_lsh_weight_sql('t.i', '(j - 1)')} * qv[j]
-                         for j in RANGE(1, LEN(qv) + 1)]) AS dot
-        FROM q, RANGE(0, {_ORACLED_PLANES}) t(i)
-    ),
-    bands AS (
-        SELECT vec_id, plane // {_ORACLED_LSH_BITS} AS band,
-               SUM(CASE WHEN dot >= 0
-                        THEN 1 << (plane % {_ORACLED_LSH_BITS}) ELSE 0 END) AS bval
-        FROM dots GROUP BY vec_id, plane // {_ORACLED_LSH_BITS}
-    ),
-    cand AS (
-        SELECT DISTINCT qb.vec_id AS query_id, db.vec_id AS vec_id
-        FROM bands qb
-        JOIN bands db ON qb.band = db.band AND qb.bval = db.bval
-        WHERE qb.vec_id IN {_QUERY_VEC_IDS} AND db.vec_id <> qb.vec_id
-    ),
-    scored AS (
-        SELECT c.query_id, c.vec_id,
-               CAST(ROUND({_SQL_COS.format(a='qq.e', b='dd.e')}, 8)
-                    AS DECIMAL(38,8)) AS cosine
-        FROM cand c
-        JOIN v qq ON qq.vec_id = c.query_id
-        JOIN v dd ON dd.vec_id = c.vec_id
-    )
-    SELECT query_id, vec_id, CAST(cosine AS VARCHAR) AS cosine,
-           CAST(rn AS INT) AS rank
-    FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                ORDER BY cosine DESC, vec_id) AS rn FROM scored)
-    WHERE rn <= {_TOP_K}
-    """,
-)
-def q_sim_ann_lsh_oracled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sign-LSH ANN with a CROSS-ENGINE hash family — the whole pipeline
-    (quantize → md5 integer hyperplanes → 8×4 banding → bucket equi-join
-    candidates → exact cosine re-rank → top-k) hash-verifies against
-    DuckDB end to end.
-
-    The float flagship (``q_sim_ann_lsh``) stays the bench path: its
-    seeded-Gaussian hyperplanes are numpy-only, capping the driver's
-    check at rows-only. Here the hyperplane entries come from md5 (same
-    trick as ``q_dedup_minhash_oracled``) and the sign decision is int64
-    arithmetic on FLOOR(e*1000)-quantized vectors, so no float summation
-    order can flip a bit between engines. Same plan shape as the
-    flagship: one Arrow-vectorized signature pass, posexplode inverted
-    index, broadcast bucket equi-join, candidates-only exact scoring.
-    (The oracle spells the band join over all (vec, band) rows because
-    DuckDB has no partitioned-index idiom — the Spark side is the real
-    banded design.)
-    """
-    emb = _embeddings(spark, sf_dir)
-    dim = len(emb.select("e").first()["e"])
-    signed = emb.withColumn(
-        "bands", _oracled_band_udf(dim)(F.col("e"))
-    ).cache()
-    buckets = signed.select(
-        "vec_id", F.posexplode("bands").alias("band", "bval")
-    )
-    qvec = signed.filter(F.col("vec_id").isin(*_QUERY_VEC_IDS)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.col("n").alias("qn"),
-        F.col("bands").alias("qbands"),
-    )
-    qbuckets = qvec.select(
-        "query_id", F.posexplode("qbands").alias("band", "bval")
-    )
-    candidates = (
-        buckets.join(F.broadcast(qbuckets), ["band", "bval"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id")
-        .distinct()
-    )
-    scored = (
-        candidates.join(signed.select("vec_id", "e", "n"), "vec_id")
-        .join(F.broadcast(qvec.select("query_id", "qe", "qn")), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            _cos8()
-            .cast("decimal(38,8)")
-            .alias("cosine"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= _TOP_K)
-        .select("query_id", "vec_id", canon("cosine").alias("cosine"), "rank")
-    )
-
-
-# Canonical gate names carry the md5 cross-engine plans (VERDICT r10 #3);
-# the float/trained natives are the *_native functions above.
-alias_query("q_sim_ann_lsh", "q_sim_ann_lsh_oracled")
-
-
-def _anchor_assign_udf(dim: int, top: int):
-    """Top-``top`` md5-anchor buckets per vector by int64 dot (dot desc,
-    anchor id asc — stable argsort matches the SQL ROW_NUMBER order)."""
-    from pyspark.sql.functions import pandas_udf
-
-    A = _md5_matrix(["a"], _ORACLED_IVF_K, dim)  # k × dim
-
-    @pandas_udf("array<int>")
-    def nearest(col: pd.Series) -> pd.Series:
-        Q = _quantize(np.stack(col.to_numpy()))
-        dots = Q @ A.T  # batch × k, exact int64
-        order = np.argsort(-dots, axis=1, kind="stable")[:, :top]
-        return pd.Series([row.astype(np.int32).tolist() for row in order])
-
-    return nearest
-
-
-@query(
-    "q_sim_ann_ivf_oracled",
-    oracle=f"""
-    WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-    q AS (SELECT vec_id, e,
-                 [CAST(FLOOR(x * {_Q_SCALE}) AS BIGINT) for x in e] AS qv
-          FROM v),
-    adots AS (
-        SELECT q.vec_id, t.c AS anchor,
-               LIST_SUM([{_lsh_weight_sql("'a:' || t.c", '(j - 1)')} * qv[j]
-                         for j in RANGE(1, LEN(qv) + 1)]) AS dot
-        FROM q, RANGE(0, {_ORACLED_IVF_K}) t(c)
-    ),
-    ranked AS (
-        SELECT vec_id, anchor,
-               ROW_NUMBER() OVER (PARTITION BY vec_id
-                                  ORDER BY dot DESC, anchor) AS rn
-        FROM adots
-    ),
-    buckets AS (SELECT vec_id, anchor FROM ranked WHERE rn = 1),
-    probes AS (SELECT vec_id AS query_id, anchor FROM ranked
-               WHERE rn <= {_ORACLED_IVF_PROBES}
-                 AND vec_id IN {_QUERY_VEC_IDS}),
-    cand AS (
-        SELECT DISTINCT p.query_id, b.vec_id
-        FROM probes p JOIN buckets b ON b.anchor = p.anchor
-        WHERE b.vec_id <> p.query_id
-    ),
-    scored AS (
-        SELECT c.query_id, c.vec_id,
-               CAST(ROUND({_SQL_COS.format(a='qq.e', b='dd.e')}, 8)
-                    AS DECIMAL(38,8)) AS cosine
-        FROM cand c
-        JOIN v qq ON qq.vec_id = c.query_id
-        JOIN v dd ON dd.vec_id = c.vec_id
-    )
-    SELECT query_id, vec_id, CAST(cosine AS VARCHAR) AS cosine,
-           CAST(rn AS INT) AS rank
-    FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                ORDER BY cosine DESC, vec_id) AS rn FROM scored)
-    WHERE rn <= {_TOP_K}
-    """,
-)
-def q_sim_ann_ivf_oracled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF bucket-probe-rerank with a CROSS-ENGINE anchor family: bucket
-    assignment is argmax over {_ORACLED_IVF_K} md5-derived integer anchor
-    vectors (int64 dots on quantized embeddings — exact in both engines),
-    queries probe their top-{_ORACLED_IVF_PROBES} anchors, candidates get
-    the exact cosine re-rank. Hash-verifies the inverted-file pipeline
-    end to end.
-
-    The k-means flagship (``q_sim_ann_ivf``) stays the quality path —
-    Lloyd-trained centroids cluster better than hash anchors — but its
-    float centroid iteration is engine-local, capping its check at
-    rows-only + the q_approx_audit recall contract. The pipeline under
-    test here (partition-once by bucket, probe nprobe/k of the table,
-    re-rank candidates only) is identical.
-    """
-    emb = _embeddings(spark, sf_dir)
-    dim = len(emb.select("e").first()["e"])
-    assigned = emb.select(
-        "vec_id",
-        "e",
-        "n",
-        _anchor_assign_udf(dim, 1)(F.col("e"))[0].alias("bucket"),
-    )
-    probes = (
-        emb.filter(F.col("vec_id").isin(*_QUERY_VEC_IDS))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("e").alias("qe"),
-            F.col("n").alias("qn"),
-            F.explode(
-                _anchor_assign_udf(dim, _ORACLED_IVF_PROBES)(F.col("e"))
-            ).alias("bucket"),
-        )
-    )
-    scored = (
-        assigned.join(F.broadcast(probes), "bucket")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            _cos8()
-            .cast("decimal(38,8)")
-            .alias("cosine"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= _TOP_K)
-        .select("query_id", "vec_id", canon("cosine").alias("cosine"), "rank")
-    )
-
-
-alias_query("q_sim_ann_ivf", "q_sim_ann_ivf_oracled")
-
-
-_OPQ_M = 4        # subspaces (64-dim → 4 sub-vectors of 16 dims)
-_OPQ_DSUB = 16
-_OPQ_K = 16       # centroids per subspace
-_OPQ_REFINE = 4   # shortlist = REFINE * k
-
-
-def _opq_codebooks(dim: int) -> np.ndarray:
-    """md5-derived integer codebooks, shape (M, K, d_sub) — the same
-    cross-engine weight family as the hyperplanes/anchors, addressed as
-    md5('pq:<m>:<k>:<j>')."""
-    assert dim == _OPQ_M * _OPQ_DSUB
-    return np.asarray(
-        [
-            [
-                [_md5_weight("pq", m, k, j) for j in range(_OPQ_DSUB)]
-                for k in range(_OPQ_K)
-            ]
-            for m in range(_OPQ_M)
-        ],
-        dtype=np.int64,
-    )
-
-
-def _opq_encode_udf(books: np.ndarray):
-    """codes[m] = argmin_k ||qv_sub_m - C[m,k]||² on int64 — exact, ties
-    to the lowest k (np.argmin takes the first minimum)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<int>")
-    def enc(col: pd.Series) -> pd.Series:
-        Q = _quantize(np.stack(col.to_numpy())).reshape(
-            -1, _OPQ_M, _OPQ_DSUB
-        )  # batch × M × d
-        # dists: batch × M × K
-        d = ((Q[:, :, None, :] - books[None, :, :, :]) ** 2).sum(axis=3)
-        codes = np.argmin(d, axis=2).astype(np.int32)
-        return pd.Series([row.tolist() for row in codes])
-
-    return enc
-
-
-def _opq_weight_sql(m: str, k: str, j: str) -> str:
-    return _lsh_weight_sql(f"'pq:' || {m} || ':' || {k}", j)
-
-
-@query(
-    "q_sim_ann_pq_oracled",
-    oracle=f"""
-    WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-    q AS (SELECT vec_id, e,
-                 [CAST(FLOOR(x * {_Q_SCALE}) AS BIGINT) for x in e] AS qv
-          FROM v),
-    dists AS (
-        SELECT q.vec_id, t.m AS m, s.k AS k,
-               LIST_SUM([(qv[t.m * {_OPQ_DSUB} + j]
-                          - {_opq_weight_sql('t.m', 's.k', '(j - 1)')})
-                         * (qv[t.m * {_OPQ_DSUB} + j]
-                            - {_opq_weight_sql('t.m', 's.k', '(j - 1)')})
-                         for j in RANGE(1, {_OPQ_DSUB} + 1)]) AS dist
-        FROM q, RANGE(0, {_OPQ_M}) t(m), RANGE(0, {_OPQ_K}) s(k)
-    ),
-    codes AS (
-        SELECT vec_id, m, k AS code
-        FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, m
-                                           ORDER BY dist, k) AS rn
-              FROM dists)
-        WHERE rn = 1
-    ),
-    adc AS (
-        SELECT qq.vec_id AS query_id, c.vec_id,
-               SUM(LIST_SUM([qq.qv[c.m * {_OPQ_DSUB} + j]
-                             * {_opq_weight_sql('c.m', 'c.code', '(j - 1)')}
-                             for j in RANGE(1, {_OPQ_DSUB} + 1)])) AS adc_ip
-        FROM codes c
-        JOIN q qq ON qq.vec_id IN {_QUERY_VEC_IDS}
-        WHERE c.vec_id <> qq.vec_id
-        GROUP BY qq.vec_id, c.vec_id
-    ),
-    shortlist AS (
-        SELECT query_id, vec_id
-        FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                    ORDER BY adc_ip DESC, vec_id) AS arank FROM adc)
-        WHERE arank <= {_OPQ_REFINE * _TOP_K}
-    ),
-    scored AS (
-        SELECT s.query_id, s.vec_id,
-               CAST(ROUND({_SQL_COS.format(a='qq.e', b='dd.e')}, 8)
-                    AS DECIMAL(38,8)) AS cosine
-        FROM shortlist s
-        JOIN v qq ON qq.vec_id = s.query_id
-        JOIN v dd ON dd.vec_id = s.vec_id
-    )
-    SELECT query_id, vec_id, CAST(cosine AS VARCHAR) AS cosine,
-           CAST(rn AS INT) AS rank
-    FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                ORDER BY cosine DESC, vec_id) AS rn FROM scored)
-    WHERE rn <= {_TOP_K}
-    """,
-)
-def q_sim_ann_pq_oracled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantized ANN with a CROSS-ENGINE integer codebook: md5
-    integer centroids per subspace, int64 argmin encoding, exact integer
-    inner-product ADC, shortlist → exact cosine refine — the whole
-    compress/score/refine pipeline hash-verifies against DuckDB.
-
-    The trained flagship (``q_sim_ann_pq``, sample-trained float
-    codebooks) stays the quality path with its recall audited by
-    ``q_approx_audit``; this twin pins the PQ mechanics bit-for-bit.
-    Plan shape matches the flagship: one Arrow encode pass producing the
-    persisted code table, per-query integer LUT folded over codes as a
-    built-in aggregate expression (no Python in scoring), ADC shortlist
-    window, candidates-only exact re-rank.
-    """
-    emb = _embeddings(spark, sf_dir).cache()
-    dim = len(emb.select("e").first()["e"])
-    books = _opq_codebooks(dim)
-    codes = emb.select(
-        "vec_id", "n", _opq_encode_udf(books)(F.col("e")).alias("codes")
-    )
-    # per-query integer LUTs: lut[m*K + k] = <qv_sub_m, C[m,k]> (exact)
-    qrows = (
-        emb.filter(F.col("vec_id").isin(*_QUERY_VEC_IDS))
-        .select("vec_id", "e", "n")
-        .collect()
-    )
-    lut_rows = []
-    for r in qrows:
-        qv = np.floor(np.asarray(r.e, dtype=np.float64) * _Q_SCALE).astype(
-            np.int64
-        ).reshape(_OPQ_M, _OPQ_DSUB)
-        lut = np.einsum("ms,mks->mk", qv, books).reshape(-1)
-        lut_rows.append((r.vec_id, r.n, lut.tolist()))
-    luts = local_df(spark, 
-        lut_rows, "query_id long, qn double, lut array<long>"
-    )
-    adc = F.expr(
-        f"aggregate(sequence(0, {_OPQ_M - 1}), CAST(0 AS BIGINT),"
-        f" (acc, m) -> acc + lut[m * {_OPQ_K} + element_at(codes, m + 1)])"
-    )
-    approx = codes.join(
-        F.broadcast(luts), F.col("vec_id") != F.col("query_id")
-    ).select("query_id", "vec_id", adc.alias("adc_ip"))
-    wa = W.partitionBy("query_id").orderBy(
-        F.col("adc_ip").desc(), F.col("vec_id").asc()
-    )
-    shortlist = (
-        approx.withColumn("arank", F.row_number().over(wa))
-        .filter(F.col("arank") <= _OPQ_REFINE * _TOP_K)
-        .select("query_id", "vec_id")
-    )
-    qvec = emb.filter(F.col("vec_id").isin(*_QUERY_VEC_IDS)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.col("n").alias("qn"),
-    )
-    scored = (
-        shortlist.join(emb.select("vec_id", "e", "n"), "vec_id")
-        .join(F.broadcast(qvec), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            _cos8()
-            .cast("decimal(38,8)")
-            .alias("cosine"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= _TOP_K)
-        .select("query_id", "vec_id", canon("cosine").alias("cosine"), "rank")
-    )
-
-
-alias_query("q_sim_ann_pq", "q_sim_ann_pq_oracled")

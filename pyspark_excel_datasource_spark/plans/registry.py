@@ -114,14 +114,14 @@ def alias_query(name: str, target: str) -> None:
     """Register an already-registered oracled query under a second gate
     name (same plan, same oracle).
 
-    Round-11 use: the five approximate flagships' canonical gate names
-    (``q_dedup_minhash`` …) now carry the cross-engine md5 plans of their
-    ``_oracled`` twins, so every registered query is hash-verifiable and
-    the driver can never again record a ``no_oracle`` row (VERDICT r10
-    ask #3). The xxhash64/float natives stay importable module functions
-    (``*_native``) — still the bench fast path and still recall-audited
-    in-plan by ``q_approx_audit``/``q_sim_ann_recall`` — just not
-    separately gate-named.
+    The five approximate operators' canonical gate names
+    (``q_dedup_minhash`` …) point at their ``_oracled`` names: the md5
+    hash family run through the operator's one builder, so every
+    registered query is hash-verifiable (VERDICT r10 ask #3). The same
+    builders run the engine-native family (xxhash64, seeded or trained
+    float) behind the unregistered ``*_native`` functions — the bench
+    fast path, recall-audited in-plan by ``q_approx_audit``,
+    ``q_sim_ann_recall`` and the ``*_native_audit`` rows.
     """
     fn = QUERIES[target].__wrapped__  # re-wrap the raw fn, not the wrapper
     query(name, oracle=ORACLES.get(target))(fn)

@@ -64,6 +64,24 @@ def test_bloom_semi_join_shuffle_fallback_same_result(spark):
     assert got == expected
 
 
+def test_bloom_literal_memo_keeps_alternating_arrays(spark):
+    """Two bloom word arrays used in turn (A, B, A, B) must both stay
+    memoized: the second A and B calls reuse the Column built by the
+    first ones instead of paying the literal build again."""
+    from pyspark_excel_datasource_spark.operators import scale
+
+    fact = spark.range(10).withColumnRenamed("id", "k")
+    dim = spark.range(5).withColumnRenamed("id", "d")
+    app_id = spark.sparkContext.applicationId
+    arrays = {name: [bit] * scale._BLOOM_WORDS for name, bit in (("A", 1), ("B", 2))}
+    built = {}
+    for name in ("A", "B", "A", "B"):
+        arr = arrays[name]
+        scale.bloom_semi_join(fact, dim, "k", "d", prebuilt=(arr, 5))
+        col = scale._BLOOM_COLUMN_MEMO[(app_id, tuple(arr))]
+        assert built.setdefault(name, col) is col, name
+
+
 # ---------------------------------------------------------------------------
 # new operator semantics
 # ---------------------------------------------------------------------------

@@ -14,7 +14,7 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark_excel_datasource_spark.session import get_session
 from pyspark_excel_datasource_spark.sources.excel import register_excel

@@ -6,9 +6,10 @@ queries: python tools/gen_coverage.py > COVERAGE.md
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark_excel_datasource_spark.plans.registry import ORACLES, load_all_queries
 

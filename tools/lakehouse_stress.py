@@ -24,12 +24,13 @@ Usage: python tools/lakehouse_stress.py [workdir]
 
 from __future__ import annotations
 
+import os
 import shutil
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
@@ -38,7 +39,6 @@ from pyspark_excel_datasource_spark.session import get_session
 from pyspark_excel_datasource_spark.sources import deltalog
 from pyspark_excel_datasource_spark.sources import iceberg as ice
 
-import os
 
 SF = os.environ.get("STRESS_SF", "/root/testdata/sf0.01")
 COMMITS = 4

@@ -10,10 +10,11 @@ while iterating (fast) and at sf0.01 before committing a milestone.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark_excel_datasource_spark.plans.registry import ORACLES, load_all_queries
 from pyspark_excel_datasource_spark.session import get_session
